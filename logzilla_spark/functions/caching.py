@@ -30,7 +30,8 @@ gate) may ignore this module entirely — their caches die with the
 session, and MEMORY_AND_DISK entries are LRU-evictable either way.
 
 Thread safety: the registry is lock-guarded; scopes release only the
-entries registered while they were open (LIFO-nested scopes work).
+entries registered while they were open (LIFO-nested scopes work), and
+each cached plan is registered once, by its first persist.
 """
 
 from __future__ import annotations
@@ -50,9 +51,17 @@ def persist_tracked(
     df: DataFrame,
     level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
 ) -> DataFrame:
-    """``df.persist(level)``, registered for later bulk release."""
-    out = df.persist(level)
+    """``df.persist(level)``, registered for later bulk release.
+
+    A plan the CacheManager already holds (a repeated operator call on
+    the same input) is returned as is and not registered again: its
+    first registrant owns the release, so a nested scope never frees an
+    outer scope's cache.
+    """
     with _LOCK:
+        if df.storageLevel != StorageLevel.NONE:
+            return df
+        out = df.persist(level)
         _TRACKED.append(out)
     return out
 

@@ -32,6 +32,7 @@ import os
 import re
 import uuid
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -303,11 +304,15 @@ class Pipeline:
             raise RuntimeError("injected failure after aggregate")
 
         lineage_rows.append((run_id, "parse", -1, rows_in, sum(routed.values()), head))
+        # a driver-side clock value, not F.current_timestamp(): Spark folds
+        # that into a literal inside the generated Java, so every run
+        # would compile new classes for the same plan
+        committed_at = datetime.now(timezone.utc)
         metrics = self.spark.createDataFrame(
-            [r + (None,) for r in lineage_rows],
+            [r + (committed_at,) for r in lineage_rows],
             schema="run_id string, stage string, partition_id int, rows_in bigint, "
                    "rows_out bigint, input_snapshot_id bigint, committed_at timestamp",
-        ).withColumn("committed_at", F.current_timestamp())
+        )
         self.cat.append(metrics, METRICS_TABLE, summary=dict(tag))
         if fail_after_stage == "metrics":
             raise RuntimeError("injected failure after metrics")

@@ -14,6 +14,13 @@ Scale notes (100 TB / 1000-executor design):
   Arrow record batches inside pandas UDFs.
 - Session timezone pinned to UTC so results are byte-comparable with the
   DuckDB oracle and stable across machines.
+- Compiled generated classes are reused across queries of one shape:
+  Spark's per-JVM codegen class cache is an LRU keyed by generated
+  source, and its 100-entry default is smaller than the engine's
+  working set (one curate pass ~124 classes, one ingest unit ~203), so
+  every class was evicted before its next use and Janino and the JIT
+  redid the work on each repeat. The long-lived JVMs (server, streams)
+  serve repeated shapes, so the cache holds several working sets.
 """
 
 from __future__ import annotations
@@ -24,13 +31,23 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Entries in the JVM-wide cache of compiled generated classes
+# (``spark.sql.codegen.cache.maxEntries``, static, default 100); ~5x the
+# largest measured working set. Measured: one curate pass compiles 123
+# classes cold, one ingest unit uses ~203 distinct cache keys; at 100 a
+# warm curate pass recompiled ~52 classes, 10.3 of its 17.2 JVM CPU-s.
+CODEGEN_CACHE_MAX_ENTRIES = 1000
+
 
 def engine_sql_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
-    """Runtime-settable SQL confs the engine depends on.
+    """SQL confs the engine depends on, for ``SparkSession.builder``.
 
-    Shared by :func:`get_spark` (local sessions) and ``main.py``'s
-    spark-submit path, where the session master/memory come from the
-    submit command and only these session confs are applied on top.
+    Every session builder applies them before ``getOrCreate()``:
+    :func:`get_spark` (local sessions), ``main.py``'s spark-submit path
+    (master/memory come from the submit command) and
+    ``scripts/standalone_scaling.py``. Some are static (the codegen
+    cache size), so they take effect only on a new session's builder,
+    never through ``spark.conf.set``.
     """
     confs = {
         "spark.sql.session.timeZone": "UTC",
@@ -46,18 +63,11 @@ def engine_sql_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
         # 15% off the parse+route wall at 32 cores vs 10k (50k: no better)
         "spark.sql.execution.arrow.maxRecordsPerBatch": "20000",
         "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_MAX_ENTRIES),
     }
     if shuffle_partitions:
         confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     return confs
-
-
-def configure_session(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
-    """Apply engine SQL confs to an externally-built session
-    (the spark-submit path: master/memory/py-files are submit args)."""
-    for k, v in engine_sql_confs(shuffle_partitions).items():
-        spark.conf.set(k, v)
-    return spark
 
 
 def get_spark(
@@ -90,7 +100,6 @@ def get_spark(
         # otherwise a k-round loop leaves k vocab-sized snapshots in
         # the checkpoint store (functions/lineage.py)
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # Local corpora are a few MB-GB, so the default 128m split size
         # would serialize the CPU-heavy parse stage onto a handful of
         # tasks; 4m keeps scan parallelism ~10 tasks/core at the bench

@@ -23,9 +23,10 @@ committed since the last checkpoint, and prints a one-line JSON run
 report. Re-running after a crash is always safe (idempotent end state
 — tested in tests/test_pipeline_resume.py).
 
-The session master/memory/parallelism come from spark-submit; only
-runtime SQL confs (AQE, Arrow, UTC timezone) are applied here, so the
-identical script runs on local[N] and on a 1000-executor cluster.
+The session master/memory/parallelism come from spark-submit; only the
+engine's SQL confs (AQE, Arrow, UTC timezone, codegen cache size) are
+applied here, on the session builder, so the identical script runs on
+local[N] and on a 1000-executor cluster.
 """
 
 from __future__ import annotations
@@ -91,12 +92,13 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from logzilla_spark.plans.pipeline import Pipeline
-    from logzilla_spark.session import configure_session
+    from logzilla_spark.session import engine_sql_confs
     from logzilla_spark.sources.catalog import LocalCatalog
 
-    spark = configure_session(
-        SparkSession.builder.appName("logzilla-spark").getOrCreate(),
-        shuffle_partitions=args.shuffle_partitions,
+    spark = (
+        SparkSession.builder.appName("logzilla-spark")
+        .config(map=engine_sql_confs(args.shuffle_partitions))
+        .getOrCreate()
     )
     cfg = None
     if args.config:

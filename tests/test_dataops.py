@@ -1283,6 +1283,12 @@ def test_operator_cache_scope_releases_tracked_persists(spark):
         added = rdd_ids() - base
         assert added  # the feature persist registered and materialized
         assert n >= 1
+        # a repeated call on the same input finds its plans cached:
+        # no second registration, no second cache entry
+        tracked = len(caching._TRACKED)
+        assert dedup.minhash_lsh_pairs(df).count() == n
+        assert len(caching._TRACKED) == tracked
+        assert rdd_ids() - base == added
     # scope exit unpersisted the feature table (async — poll briefly)
     for _ in range(50):
         if not (rdd_ids() & added):

@@ -96,11 +96,21 @@ def test_crash_resume_idempotent(spark, tmp_path, fail_stage):
 
 
 def test_lineage_metrics(spark, tmp_path):
+    import time
+
     cat, p, pages = _mk(spark, tmp_path, "wh_m")
     p.ingest_pages(pages)
+    t0_us = int(time.time() * 1e6)
     rep = p.run(run_id="r1")
+    t1_us = int(time.time() * 1e6)
     m = cat.read(spark, METRICS_TABLE)
     rows = m.collect()
+    # one driver-side commit clock per run, taken inside the run
+    stamps = {
+        r.us for r in m.select(F.unix_micros("committed_at").alias("us")).collect()
+    }
+    assert len(stamps) == 1
+    assert t0_us <= stamps.pop() <= t1_us
     stages = {r.stage for r in rows}
     assert stages == {"parse"} | {f"route_{c}" for c in CATEGORIES}
     # lineage counters reconcile with routed counts
