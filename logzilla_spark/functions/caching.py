@@ -1,50 +1,59 @@
-"""Tracked persists for operators that return LAZY plans.
+"""The lifetime policy for operator intermediate state.
 
-Several operators (minhash_lsh_pairs, semdedup, bpe_apply,
-dsir_scores) persist an intermediate feature table because the plan
-they return consumes it 2-4 times and Spark recomputes unpersisted
-lineage once per consumer (ReuseExchange does not fire across
-DeduplicateRelations' clones). They cannot unpersist it themselves —
-the caller has not evaluated the returned plan yet — so an unmanaged
-``df.persist()`` pins CacheManager entries for the life of the
-session: a long-lived driver sweeping many corpora accumulates
-MEMORY_AND_DISK cache until a manual ``spark.catalog.clearCache()``.
+Every frame an operator materializes for its own use has one owner and
+one release point, chosen by the operator's shape:
 
-This module makes that lifetime explicit. Operators persist through
-:func:`persist_tracked`; callers either
+- **Iterative driver loops** (the CC loop, BPE training, k-means)
+  :func:`truncate` every round. Without truncation round k's plan
+  replays all k-1 predecessors (measured in the CC loop: 1.5s -> 48s
+  by round 5). The loop REBINDS its variable each round: CPython drops
+  the superseded frame at once and Spark's ContextCleaner frees its
+  storage (``DataFrame.unpersist()`` is a no-op on checkpointed
+  frames). A rebinding loop holds ~2 rounds of storage whatever the
+  round count; a loop that KEEPS per-round frames (the CC mapping
+  fold) holds what it keeps, by design.
+- **Operators that run their own actions** (``build_ann_index``,
+  ``update_ann_index``) ``persist()`` and ``unpersist()`` in
+  ``finally``: every consumer has run by the time they return.
+- **Operators that return lazy plans** (minhash_lsh_pairs, semdedup,
+  bpe_apply, dsir_scores, ...) use :func:`persist_tracked`. The plan
+  they return consumes the persisted table 2-4 times, and Spark
+  recomputes unpersisted lineage once per consumer (ReuseExchange does
+  not fire across DeduplicateRelations' clones). They cannot unpersist
+  it themselves — the caller has not evaluated the plan yet — so the
+  registry owns it until :func:`release_operator_caches`. A long-lived
+  driver sweeping many corpora calls it between corpora; single-shot
+  drivers (the bench, the driver gate) may ignore it — their caches
+  die with the session, and MEMORY_AND_DISK entries are LRU-evictable
+  either way. Releasing before the consuming action is still correct
+  (Spark recomputes the lineage); it only forfeits the reuse.
 
-- wrap each corpus sweep in :func:`operator_cache_scope` (unpersists
-  everything the scope created once the caller's ACTIONS have run)::
-
-      with operator_cache_scope():
-          pairs = minhash_lsh_pairs(docs)
-          pairs.write.parquet(out)          # evaluate INSIDE the scope
-
-- or call :func:`release_operator_caches` between corpora.
-
-Unpersisting is safe at any point for CORRECTNESS (Spark falls back
-to recomputing lineage); releasing before the consuming action merely
-forfeits the reuse the persist bought, so scopes should close after
-the work is evaluated. Single-shot drivers (the bench, the driver
-gate) may ignore this module entirely — their caches die with the
-session, and MEMORY_AND_DISK entries are LRU-evictable either way.
-
-Thread safety: the registry is lock-guarded; scopes release only the
-entries registered while they were open (LIFO-nested scopes work), and
-each cached plan is registered once, by its first persist.
+The truncation mode is the deployment's, not the operator's: reliable
+``checkpoint()`` when the session was built with Spark's
+``spark.checkpoint.dir`` (a fault-tolerant store; a lost executor's
+round is re-read, not lost), ``localCheckpoint()`` otherwise (fast;
+its blocks live in the executors' block managers at MEMORY_AND_DISK
+and die with them). With ``cleanCheckpoints`` enabled (session.py)
+the cleaner also deletes a dereferenced round's checkpoint files.
 """
 
 from __future__ import annotations
 
 import threading
-from contextlib import contextmanager
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 _LOCK = threading.Lock()
 _TRACKED: list[DataFrame] = []
+
+
+def truncate(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and cut its lineage, in the mode the
+    session's deployment chose (see the module docstring)."""
+    if df.sparkSession.conf.get("spark.checkpoint.dir", None):
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def persist_tracked(
@@ -55,8 +64,7 @@ def persist_tracked(
 
     A plan the CacheManager already holds (a repeated operator call on
     the same input) is returned as is and not registered again: its
-    first registrant owns the release, so a nested scope never frees an
-    outer scope's cache.
+    first registrant owns the release. The registry is lock-guarded.
     """
     with _LOCK:
         if df.storageLevel != StorageLevel.NONE:
@@ -80,25 +88,3 @@ def release_operator_caches() -> int:
         except Exception:  # session already stopped — nothing to free
             pass
     return len(frames)
-
-
-@contextmanager
-def operator_cache_scope() -> Iterator[None]:
-    """Release the persists created inside the ``with`` body on exit.
-
-    Only frames registered while the scope is open are released, so
-    nested scopes (an outer sweep composing inner operators) free
-    exactly their own additions.
-    """
-    with _LOCK:
-        mark = len(_TRACKED)
-    try:
-        yield
-    finally:
-        with _LOCK:
-            frames, _TRACKED[mark:] = list(_TRACKED[mark:]), []
-        for df in frames:
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                pass

@@ -44,6 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from logzilla_spark.functions.caching import persist_tracked
 from logzilla_spark.operators.similarity import (
@@ -100,9 +101,9 @@ def build_ann_index(
     (params + committed snapshot ids).
     """
     seeds = codebooks = None
-    vecs = persist_tracked(
-        emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    )
+    vecs = emb.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         if trained:
             seeds = ivf_train_kmeans(vecs, n_cells, ivf_iters)
@@ -113,9 +114,9 @@ def build_ann_index(
         # the k-row / (m x ksub)-row artifacts are consumed twice below
         # (their own write + the codes build) — cheap either way, but
         # recomputing a TRAINED quantizer would re-run the k-means
-        # loops, so pin both via the tracked cache
-        seeds = persist_tracked(seeds)
-        codebooks = persist_tracked(codebooks)
+        # loops, so pin both for the build
+        seeds = seeds.persist(StorageLevel.MEMORY_AND_DISK)
+        codebooks = codebooks.persist(StorageLevel.MEMORY_AND_DISK)
         assigned = ivf_assign(vecs, seeds).select(
             F.col("id").alias("vec_id"), "cell"
         )
@@ -136,9 +137,9 @@ def build_ann_index(
             ),
         }
     finally:
-        # the build is self-contained: every consumer of the cached
-        # frames ran inside the overwrite jobs above, so release them
-        # here instead of leaving pins for the tracked-cache registry
+        # the build runs its own actions: every consumer of the cached
+        # frames ran inside the overwrite jobs above, so it owns and
+        # releases them here (functions/caching.py)
         for frame in (vecs, seeds, codebooks):
             if frame is not None:
                 frame.unpersist()
@@ -198,11 +199,9 @@ def update_ann_index(
     m, dim = int(params["m"]), int(params["dim"])
     seeds = catalog.read(emb_new.sparkSession, name + CENTROIDS_SUFFIX)
     codebooks = catalog.read(emb_new.sparkSession, name + CODEBOOKS_SUFFIX)
-    vecs = persist_tracked(
-        emb_new.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-        )
-    )
+    vecs = emb_new.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         assigned = ivf_assign(vecs, seeds).select(
             F.col("id").alias("vec_id"), "cell"

@@ -27,15 +27,16 @@ Two lessons from the first cut of this operator are load-bearing:
   Spark's DeduplicateRelations clones the subtree, ReuseExchange does
   not fire across the clones, and at sf0.1 the doubled minhash verify
   stage OOMed a 16g heap.
-- Per-round state is truncated with ``localCheckpoint(eager=True)``,
-  not persist(): caching stores the DATA but the logical plan keeps
+- Per-round state is truncated with an eager checkpoint, not
+  persist(): caching stores the DATA but the logical plan keeps
   deepening, and Catalyst re-analyzes the full chain every round —
   measured round times of 1.5s -> 48s by round 5 with persist, flat
   ~1s with checkpoint truncation. (GraphFrames' CC does exactly this.)
-  localCheckpoint trades executor-loss recovery for speed; pass
-  ``checkpoint_dir`` to use reliable checkpoint() on a fault-tolerant
-  store instead (the 1000-executor choice, where losing an executor
-  mid-round is routine).
+  The deployment picks the mode (functions/caching.py): a session
+  built with ``spark.checkpoint.dir`` gets reliable checkpoint() on
+  that fault-tolerant store (the 1000-executor choice, where losing an
+  executor mid-round is routine); otherwise localCheckpoint trades
+  executor-loss recovery for speed.
 
 Scale shape (100 TB): each round is one shuffle join (labels x edges,
 both keyed by id), one groupBy(id) min, one self-join for the jump —
@@ -53,7 +54,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from logzilla_spark.functions.lineage import truncate as _truncate
+from logzilla_spark.functions.caching import truncate as _truncate
 
 MAX_CC_ITER = 25  # pointer jumping: rounds ~ log2(largest component)
 
@@ -63,13 +64,10 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = MAX_CC_ITER,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(id, cluster_id) for every node in ``pairs``; cluster_id is the
     minimum node id in the component. Nodes absent from ``pairs`` are
     absent here — join singletons back via neardup_clusters."""
-    if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
     # ONE materialization of the (possibly expensive) pair lineage,
     # BEFORE mirroring (see module docstring); the mirror itself is a
     # lazy union over the truncated frame — no second materialization.
@@ -77,10 +75,7 @@ def connected_components(
     # unique rows, and even genuinely duplicated input edges are
     # harmless — the hook step is a min-aggregation and the contraction
     # dedups — so the old full-width distinct shuffle bought nothing.
-    e = _truncate(
-        pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")),
-        checkpoint_dir,
-    )
+    e = _truncate(pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")))
     edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     converged = False
     rounds: list[DataFrame] = []
@@ -109,7 +104,7 @@ def connected_components(
             cur = cur.join(
                 jump, cur["label"] == jump[f"_jid{j}"], "left"
             ).select("id", F.coalesce(f"_jl{j}", "label").alias("label"))
-        lab2 = _truncate(cur, checkpoint_dir)
+        lab2 = _truncate(cur)
         # lab2 is materialized ONCE per round and consumed twice: by the
         # edge contraction below now, and by the mapping composition
         # after the loop. (The first cut folded it into the global
@@ -125,15 +120,14 @@ def connected_components(
         la = lab2.select(F.col("id").alias("a"), F.col("label").alias("_la"))
         lb = lab2.select(F.col("id").alias("b"), F.col("label").alias("_lb"))
         # rebinding `edges` drops the superseded round; ContextCleaner
-        # frees its checkpoint storage (functions/lineage.py). rounds[]
+        # frees its checkpoint storage (functions/caching.py). rounds[]
         # entries are kept on purpose — the deferred mapping fold
         # consumes them after the loop.
         edges = _truncate(
             edges.join(la, "a").join(lb, "b")
             .select(F.col("_la").alias("a"), F.col("_lb").alias("b"))
             .filter(F.col("a") != F.col("b"))
-            .distinct(),
-            checkpoint_dir,
+            .distinct()
         )
         if edges.isEmpty():
             converged = True
@@ -169,15 +163,11 @@ def neardup_clusters(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = MAX_CC_ITER,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Every doc with its near-dup cluster: (id, cluster_id,
     is_canonical). Docs in no pair are their own singleton cluster;
     the kept corpus after dedup is ``filter(is_canonical)``."""
-    cc = connected_components(
-        pairs, a_col=a_col, b_col=b_col, max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
-    )
+    cc = connected_components(pairs, a_col=a_col, b_col=b_col, max_iter=max_iter)
     return (
         docs.select(F.col(id_col).alias("id"))
         .join(cc, "id", "left")
@@ -198,7 +188,6 @@ def neardup_keep_best(
     b_col: str = "doc_b",
     score_col: str = "quality",
     max_iter: int = MAX_CC_ITER,
-    checkpoint_dir: str | None = None,
     cache_scored: bool = True,
 ) -> DataFrame:
     """Near-dup curation endpoint: per cluster, keep the HIGHEST-score
@@ -240,7 +229,7 @@ def neardup_keep_best(
 
     cc = neardup_clusters(
         docs, pairs, id_col=id_col, a_col=a_col, b_col=b_col,
-        max_iter=max_iter, checkpoint_dir=checkpoint_dir,
+        max_iter=max_iter,
     )
     scored = cc.select("id", "cluster_id").join(scores, "id", "left")
     if cache_scored:

@@ -9,18 +9,15 @@ table per parsed ``category`` (SURVEY.md §2.5 G3) with two invariants
 - set equality: union of all sinks == the parsed record set;
 - disjointness: sinks are pairwise disjoint on ``id``.
 
-Single-pass guarantee: the parsed DataFrame is materialized exactly once
-(``persist``), then each sink write is a filter over the cached data —
-upstream parse/enrich run once no matter how many categories exist.
-At cluster scale the same shape holds (cache in memory/disk, or write a
-single category-partitioned staging table and copy per-partition).
+Single-pass guarantee: the parsed DataFrame is written exactly once, as
+one category-partitioned staging write whose per-category directories
+each sink commits metadata-only — upstream parse/enrich run once no
+matter how many categories exist, with no cache to own or release.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..schemas import CATEGORIES
 from ..sources.catalog import LocalCatalog
@@ -28,40 +25,6 @@ from ..sources.catalog import LocalCatalog
 
 def sink_name(category: str) -> str:
     return f"sink_{category}"
-
-
-def route_to_sinks(
-    records: DataFrame,
-    catalog: LocalCatalog,
-    categories: list[str] | None = None,
-    run_id: str | None = None,
-    materialized: bool = False,
-) -> dict[str, int]:
-    """Fan records out to per-category sinks; returns snapshot id per sink.
-
-    One upstream materialization; per-category writes are cached-filter
-    scans. Unknown categories (not in ``categories``) would be silently
-    dropped — callers pass the closed routing domain (CATEGORIES).
-
-    ``materialized=True``: caller already persisted+materialized the
-    frame (and owns its unpersist) — skips the extra count action.
-    """
-    categories = categories or CATEGORIES
-    if not materialized:
-        records = records.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        if not materialized:
-            records.count()  # materialize once
-        snaps: dict[str, int] = {}
-        for cat in categories:
-            part = records.filter(F.col("category") == cat)
-            snaps[cat] = catalog.append(
-                part, sink_name(cat), summary={"run_id": run_id, "category": cat}
-            )
-        return snaps
-    finally:
-        if not materialized:
-            records.unpersist()
 
 
 def write_partitioned_tables(

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from logzilla_spark.functions.caching import persist_tracked
+from logzilla_spark.functions.caching import persist_tracked, truncate
 from logzilla_spark.functions.hashing import hyperplanes
 from logzilla_spark.operators.dedup import COSINE_THRESHOLD, cosine_expr, dot_expr
 
@@ -468,9 +468,6 @@ def ivf_train_kmeans(
     so an untruncated loop would DOUBLE the lazy plan each iteration —
     2^n_iters clones of the corpus scan by the time a consumer runs.
     """
-    from logzilla_spark.functions.caching import persist_tracked
-    from logzilla_spark.functions.lineage import truncate
-
     seeds = ivf_seeds(emb, n_cells, id_col, vec_col)
     # every Lloyd iteration re-reads the vector frame (assignment) —
     # persist it ONCE for the loop instead of n_iters parquet scans
@@ -496,8 +493,7 @@ def ivf_train_kmeans(
         seeds = truncate(
             seeds.select("cell", F.col("seed").alias("_old"))
             .join(new_seeds, "cell", "left")
-            .select("cell", F.coalesce("seed", "_old").alias("seed")),
-            None,
+            .select("cell", F.coalesce("seed", "_old").alias("seed"))
         )
     return seeds
 
@@ -946,9 +942,6 @@ def pq_train_kmeans(
     two-phase with map-side partials. The codebook frame is
     lineage-truncated every iteration (the CC-loop discipline).
     """
-    from logzilla_spark.functions.caching import persist_tracked
-    from logzilla_spark.functions.lineage import truncate
-
     cb = pq_codebooks_seeded(emb, m, ksub, dim, id_col, vec_col)
     sv = persist_tracked(
         emb.select(
@@ -983,8 +976,7 @@ def pq_train_kmeans(
             .join(new_cb, ["sub", "code"], "left")
             .select(
                 "sub", "code", F.coalesce("codeword", "_old").alias("codeword")
-            ),
-            None,
+            )
         )
     return cb
 

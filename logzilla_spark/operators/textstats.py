@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from logzilla_spark.functions.caching import persist_tracked
+from logzilla_spark.functions.caching import persist_tracked, truncate
 from logzilla_spark.functions.hashing import P31, md5_long, md5_long_expr
 from logzilla_spark.operators.dedup import normalize_text
 
@@ -1197,7 +1197,6 @@ def bpe_train(
     n_merges: int = DEFAULT_BPE_MERGES,
     text_col: str = "text",
     min_freq: int = MIN_PAIR_FREQ,
-    checkpoint_dir: str | None = None,
     batch_size: int = 1,
 ) -> DataFrame:
     """Full BPE merge-table training (Sennrich et al. 2016): iterate
@@ -1242,20 +1241,16 @@ def bpe_train(
     word regardless of batch size); the fold cannot cascade within a
     round because merged symbols are strictly longer than any lhs and
     disjoint from every pick's symbols. Per-round lineage is truncated
-    (functions/lineage.py: localCheckpoint, or reliable checkpoint()
-    via ``checkpoint_dir`` — the neardup_clusters trade) and the loop
-    REBINDS ``vocab`` each round, so superseded rounds are
-    dereferenced immediately and the run holds ~2 vocab snapshots
-    regardless of n_merges (reliable checkpoint files are deleted by
-    the cleaner — session.py enables cleanCheckpoints).
+    (functions/caching.py: reliable checkpoint() when the deployment
+    sets ``spark.checkpoint.dir``, localCheckpoint otherwise — the
+    neardup_clusters trade) and the loop REBINDS ``vocab`` each round,
+    so superseded rounds are dereferenced immediately and the run holds
+    ~2 vocab snapshots regardless of n_merges (reliable checkpoint
+    files are deleted by the cleaner — session.py enables
+    cleanCheckpoints).
     """
-    from logzilla_spark.functions.lineage import truncate
-
     spark = df.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    vocab = truncate(_bpe_word_symbols(df, text_col), checkpoint_dir)
+    vocab = truncate(_bpe_word_symbols(df, text_col))
     merges: list[tuple[int, str, str, int]] = []
     step, n_merges = 0, int(n_merges)
     while step < n_merges:
@@ -1315,8 +1310,7 @@ def bpe_train(
                     "_s", F.array().cast("array<string>"), apply_merges
                 ).alias("_s"),
                 "wf",
-            ),
-            checkpoint_dir,
+            )
         )
     return spark.createDataFrame(
         merges, "step int, lhs string, rhs string, freq bigint"
@@ -1329,7 +1323,6 @@ def bpe_apply(
     id_col: str = "doc_id",
     text_col: str = "text",
     checkpoint_every: int = 16,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Tokenize the corpus with a TRAINED merge table (the encode side
     of bpe_train; together they close the tokenizer loop): apply the
@@ -1347,15 +1340,12 @@ def bpe_apply(
     (id, word) occurrence stream and aggregates per doc. The k merge
     folds build ONE lazy plan, truncated every ``checkpoint_every``
     merges (a 30k-merge production table would otherwise nest 30k
-    aggregate() expressions into a single Catalyst tree).
+    aggregate() expressions into a single Catalyst tree; the truncation
+    mode is the deployment's, see functions/caching.py).
 
     No SQL twin (the fold chain is the bpe_train class) — pinned by a
     differential test against the pure-Python reference encoder.
     """
-    from logzilla_spark.functions.lineage import truncate
-
-    if checkpoint_dir is not None:
-        df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
     # persisted: the occurrence stream feeds BOTH the distinct-word
     # vocab lineage and the final per-doc join, and Spark recomputes
     # unpersisted lineage per consumer (the dsir_scores/minhash
@@ -1386,7 +1376,7 @@ def bpe_apply(
             ).alias("_s"),
         )
         if (i + 1) % int(checkpoint_every) == 0:
-            vocab = truncate(vocab, checkpoint_dir)
+            vocab = truncate(vocab)
     enc = vocab.select("w", F.size("_s").alias("_n_sym"))
     return (
         occ.join(enc, "w")
@@ -1880,7 +1870,6 @@ def commit_bpe_model(
     text_col: str = "text",
     min_freq: int = MIN_PAIR_FREQ,
     batch_size: int = 8,
-    checkpoint_dir: str | None = None,
 ) -> int:
     """Train on ``corpus`` and COMMIT the merge table as the
     snapshot-versioned catalog table ``__bpe_merges`` — the tokenizer
@@ -1893,7 +1882,7 @@ def commit_bpe_model(
     snapshot id (pin it in run manifests)."""
     merges_df = bpe_train(
         corpus, n_merges, text_col=text_col, min_freq=min_freq,
-        batch_size=batch_size, checkpoint_dir=checkpoint_dir,
+        batch_size=batch_size,
     )
     n_actual = merges_df.count()
     return catalog.overwrite(

@@ -95,10 +95,11 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-XX:+UseG1GC -XX:MaxGCPauseMillis=200")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
-        # reliable checkpoint files from iterative loops (CC, BPE
-        # training) are deleted once their DataFrame is dereferenced —
+        # when the deployment sets spark.checkpoint.dir, iterative loops
+        # (CC, BPE training) truncate with reliable checkpoints; their
+        # files are deleted once the DataFrame is dereferenced —
         # otherwise a k-round loop leaves k vocab-sized snapshots in
-        # the checkpoint store (functions/lineage.py)
+        # the checkpoint store (functions/caching.py)
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # Local corpora are a few MB-GB, so the default 128m split size
         # would serialize the CPU-heavy parse stage onto a handful of

@@ -188,14 +188,20 @@ def test_incremental_update_serves_old_and_new(spark, tmp_path):
     """update_ann_index appends new vectors encoded with the COMMITTED
     quantizers (FAISS add() contract): serving afterwards equals a
     manual expected set built from the same frozen quantizers over the
-    union corpus — bit-for-bit — and new vectors are reachable."""
+    union corpus — bit-for-bit — and new vectors are reachable. Build
+    and update run their own actions and release their persists
+    themselves: neither leaves a handle in the tracked-cache registry."""
+    from logzilla_spark.functions import caching
+
     cat = LocalCatalog(str(tmp_path / "wh"))
     old = _emb(spark, n=N_VECS)
     new = _emb(spark, n=40, salt=9).withColumn(
         "vec_id", F.col("vec_id") + N_VECS
     )
+    tracked = len(caching._TRACKED)
     ann_index.build_ann_index(old, cat, "emb", m=M, ksub=KSUB, dim=DIM, n_cells=N_CELLS)
     ann_index.update_ann_index(new, cat, "emb")
+    assert len(caching._TRACKED) == tracked
     probes = _probes(old.unionByName(new))
     served = ann_index.ann_serve_topk(
         spark, cat, "emb", probes, nprobe=NPROBE, m=M, dim=DIM

@@ -1256,11 +1256,11 @@ def test_url_curate_pre1970_order(spark, tmp_path):
     assert orow.url == got[key].url
 
 
-def test_operator_cache_scope_releases_tracked_persists(spark):
-    """Operators that persist internals (minhash features, semdedup
-    assignment, bpe/dsir occurrence streams) register them; a scope
-    frees exactly its own additions on exit (ADVICE r3 leak-by-default
-    finding)."""
+def test_release_operator_caches_frees_tracked_persists(spark):
+    """Operators that return lazy plans over persisted internals
+    (minhash features, semdedup assignment, bpe/dsir occurrence
+    streams) register them; ``release_operator_caches`` frees them
+    (ADVICE r3 leak-by-default finding)."""
     import time
 
     from logzilla_spark.functions import caching
@@ -1269,27 +1269,26 @@ def test_operator_cache_scope_releases_tracked_persists(spark):
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         return {int(k) for k in jmap.keySet().toArray()}
 
-    # earlier tests register tracked persists outside any scope —
-    # drain them so the no-op check at the end sees a clean registry
-    # (their async unpersists may still be in flight: compare RDD id
-    # SETS, not sizes, so concurrent drains cannot mask the scope's
-    # own additions)
+    # earlier tests register tracked persists — drain them so the
+    # no-op check at the end sees a clean registry (their async
+    # unpersists may still be in flight: compare RDD id SETS, not
+    # sizes, so concurrent drains cannot mask this test's additions)
     caching.release_operator_caches()
     base = rdd_ids()
     df = _docs(spark)
-    with caching.operator_cache_scope():
-        pairs = dedup.minhash_lsh_pairs(df)
-        n = pairs.count()
-        added = rdd_ids() - base
-        assert added  # the feature persist registered and materialized
-        assert n >= 1
-        # a repeated call on the same input finds its plans cached:
-        # no second registration, no second cache entry
-        tracked = len(caching._TRACKED)
-        assert dedup.minhash_lsh_pairs(df).count() == n
-        assert len(caching._TRACKED) == tracked
-        assert rdd_ids() - base == added
-    # scope exit unpersisted the feature table (async — poll briefly)
+    pairs = dedup.minhash_lsh_pairs(df)
+    n = pairs.count()
+    added = rdd_ids() - base
+    assert added  # the feature persist registered and materialized
+    assert n >= 1
+    # a repeated call on the same input finds its plans cached:
+    # no second registration, no second cache entry
+    tracked = len(caching._TRACKED)
+    assert dedup.minhash_lsh_pairs(df).count() == n
+    assert len(caching._TRACKED) == tracked
+    assert rdd_ids() - base == added
+    # one release unpersists the feature table (async — poll briefly)
+    assert caching.release_operator_caches() == tracked
     for _ in range(50):
         if not (rdd_ids() & added):
             break

@@ -70,6 +70,26 @@ def test_no_rdd_access_in_engine_source():
     assert not hits, f"RDD access in engine source: {hits}"
 
 
+def test_lineage_truncation_only_in_caching_module():
+    """One lifetime policy for intermediate state: checkpointing lives
+    in ``functions/caching.py::truncate`` alone, and no operator sets
+    the shared SparkContext's checkpoint dir (the deployment does, via
+    ``spark.checkpoint.dir``). Streaming's ``checkpointLocation`` is a
+    different mechanism and does not match these patterns."""
+    import pathlib
+
+    import logzilla_spark
+
+    root = pathlib.Path(logzilla_spark.__file__).parent
+    patterns = (".checkpoint(", "localCheckpoint(", "setCheckpointDir")
+    hits = {
+        str(p.relative_to(root))
+        for p in sorted(root.rglob("*.py"))
+        if any(pat in p.read_text() for pat in patterns)
+    }
+    assert hits == {"functions/caching.py"}, hits
+
+
 def test_funnel_verdicts_exactly_two_corpus_scans(spark):
     """curation_funnel's stage-0-4 flags come from ONE corpus scan plus
     ONE bigram explode scan (round-3 verdict: the previous shape built

@@ -4,7 +4,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from logzilla_spark.operators.parse import parse_records
-from logzilla_spark.operators.route import read_all_sinks, route_to_sinks, sink_name
+from logzilla_spark.operators.route import (
+    read_all_sinks,
+    route_to_sinks_single_pass,
+    sink_name,
+)
 from logzilla_spark.schemas import CATEGORIES
 from logzilla_spark.sources.catalog import LocalCatalog, SnapshotError
 from logzilla_spark.testdata import ensure_pages
@@ -35,7 +39,7 @@ def test_route_set_equality_and_disjoint(spark, tmp_path):
     cat = LocalCatalog(str(tmp_path / "wh"))
     d = ensure_pages(SF001)
     rec = parse_records(spark.read.parquet(f"{d}/pages.parquet"), impl="native")
-    snaps = route_to_sinks(rec, cat, run_id="r1")
+    snaps = route_to_sinks_single_pass(rec, cat, run_id="r1")
     assert set(snaps) == set(CATEGORIES)
 
     union = read_all_sinks(spark, cat)
@@ -68,9 +72,9 @@ def test_route_is_single_upstream_pass(spark, tmp_path):
     counted = spark.createDataFrame(pages.rdd.mapPartitions(bump), pages.schema)
     rec = parse_records(counted, impl="native")
     cat = LocalCatalog(str(tmp_path / "wh"))
-    route_to_sinks(rec, cat, run_id="r1")
+    route_to_sinks_single_pass(rec, cat, run_id="r1")
     n_pages = pages.count()
-    # one materialization (plus zero re-reads thanks to persist)
+    # one materialization: the partitioned staging write reads it once
     assert acc.value == n_pages, f"upstream evaluated {acc.value / n_pages:.1f}x"
 
 
