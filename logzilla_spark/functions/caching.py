@@ -13,8 +13,11 @@ one release point, chosen by the operator's shape:
   round count; a loop that KEEPS per-round frames (the CC mapping
   fold) holds what it keeps, by design.
 - **Operators that run their own actions** (``build_ann_index``,
-  ``update_ann_index``) ``persist()`` and ``unpersist()`` in
-  ``finally``: every consumer has run by the time they return.
+  ``update_ann_index``, ``build_neardup_index``,
+  ``update_neardup_index``, ``materialize_training_run``) ``persist()``
+  and ``unpersist()`` in ``finally``: every consumer has run by the
+  time they return. Lazy-plan operators they compose keep their own
+  policy (below).
 - **Operators that return lazy plans** (minhash_lsh_pairs, semdedup,
   bpe_apply, dsir_scores, ...) use :func:`persist_tracked`. The plan
   they return consumes the persisted table 2-4 times, and Spark

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+from pyspark.storagelevel import StorageLevel
 from logzilla_spark.functions.caching import persist_tracked
 
 from logzilla_spark.functions.hashing import (
@@ -294,7 +295,6 @@ def minhash_lsh_pairs(
     min_est: float = MIN_EST_SIM,
     min_jaccard: float = MIN_JACCARD,
     max_bucket: int | None = MAX_LSH_BUCKET,
-    cache_features: bool = True,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash LSH.
 
@@ -343,17 +343,14 @@ def minhash_lsh_pairs(
     # executor loss Spark recomputes the lost partitions from lineage
     # (unlike localCheckpoint, which would fail the job). Measured at
     # sf0.1: 6.7-13.1s -> 5.2s steady-state, bit-identical output.
-    # ``cache_features=False`` opts out for callers that already
-    # persist/checkpoint their own feature table. Lifetime: the cache
-    # entry lives until Spark's LRU evicts it (MEMORY_AND_DISK, so
-    # eviction is safe) or the caller clears it; a long-lived session
-    # calling this repeatedly should spark.catalog.clearCache()
-    # between corpora or pass cache_features=False — the operator
-    # returns a lazy plan, so it cannot unpersist on the caller's
-    # behalf without forfeiting the reuse it exists to provide.
-    feat = _minhash_features(df, id_col, text_col)
-    if cache_features:
-        feat = persist_tracked(feat)
+    # Lifetime: the operator returns a lazy plan, so it cannot unpersist
+    # on the caller's behalf without forfeiting the reuse it exists to
+    # provide; the entry lives until release_operator_caches() (a
+    # long-lived session calls it between corpora) or Spark's LRU
+    # evicts it (MEMORY_AND_DISK, so eviction is safe). A caller that
+    # already cached this feature plan keeps its entry: persist_tracked
+    # skips a cached plan.
+    feat = persist_tracked(_minhash_features(df, id_col, text_col))
     bands = minhash_band_hashes(feat.select("id", "sig"))
     if max_bucket is not None:
         # Pre-join guard: drop pathological buckets (boilerplate)
@@ -460,7 +457,6 @@ def minhash_lsh_pairs_against(
     min_est: float = MIN_EST_SIM,
     min_jaccard: float = MIN_JACCARD,
     max_bucket: int | None = MAX_LSH_BUCKET,
-    cache_features: bool = True,
 ) -> DataFrame:
     """ASYMMETRIC near-dup pairs: new docs (``delta``) vs an existing
     reference corpus — the production recrawl/ingest-batch shape
@@ -481,11 +477,9 @@ def minhash_lsh_pairs_against(
     side (a boilerplate mega-bucket in EITHER table would otherwise
     make the bucket join quadratic).
     """
-    fd = _minhash_features(delta, id_col, text_col)
-    fc = _minhash_features(corpus, id_col, text_col)
-    if cache_features:
-        # each side's features feed its band stage AND its verify side
-        fd, fc = persist_tracked(fd), persist_tracked(fc)
+    # each side's features feed its band stage AND its verify side
+    fd = persist_tracked(_minhash_features(delta, id_col, text_col))
+    fc = persist_tracked(_minhash_features(corpus, id_col, text_col))
     return _pairs_between(
         fd, fc,
         minhash_band_hashes(fd.select("id", "sig")),
@@ -612,19 +606,27 @@ def build_neardup_index(
     deployment the bands table is an Iceberg table bucketed by
     band_hash so the per-batch join co-locates without a
     registry-side shuffle (the same note as streaming/neardup.py's
-    registry; the local catalog's range-clustering stands in)."""
-    feat = persist_tracked(_minhash_features(corpus, id_col, text_col))
-    sid_f = catalog.overwrite(
-        feat.select("id", "sig", F.col("_sh").alias("sh")),
-        NEARDUP_FEATURES_TABLE,
-        summary={"kind": "neardup_features", "id_col": id_col},
+    registry; the local catalog's range-clustering stands in).
+
+    Both commits run here, so the feature frame is persisted and
+    released in ``finally`` (functions/caching.py)."""
+    feat = _minhash_features(corpus, id_col, text_col).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    sid_b = catalog.overwrite(
-        minhash_band_hashes(feat.select("id", "sig")),
-        NEARDUP_BANDS_TABLE,
-        cluster_by=["band_hash"],
-        summary={"kind": "neardup_bands", "id_col": id_col},
-    )
+    try:
+        sid_f = catalog.overwrite(
+            feat.select("id", "sig", F.col("_sh").alias("sh")),
+            NEARDUP_FEATURES_TABLE,
+            summary={"kind": "neardup_features", "id_col": id_col},
+        )
+        sid_b = catalog.overwrite(
+            minhash_band_hashes(feat.select("id", "sig")),
+            NEARDUP_BANDS_TABLE,
+            cluster_by=["band_hash"],
+            summary={"kind": "neardup_bands", "id_col": id_col},
+        )
+    finally:
+        feat.unpersist()
     return {"features": sid_f, "bands": sid_b}
 
 
@@ -661,30 +663,36 @@ def update_neardup_index(
     heals instead of duplicating feature rows (which would multiply
     pairs through the candidate join). Without a ref, a blind retry
     duplicates both appends — the pre-T73 behavior, kept for ad-hoc
-    use."""
-    feat = persist_tracked(_minhash_features(new_docs, id_col, text_col))
+    use. Like :func:`build_neardup_index`, the feature frame is
+    persisted for the appends and released in ``finally``."""
+    feat = _minhash_features(new_docs, id_col, text_col).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     tag = {} if batch_ref is None else {"batch_ref": batch_ref}
-    if batch_ref is not None and _update_applied(
-        catalog, NEARDUP_FEATURES_TABLE, batch_ref
-    ):
-        sid_f = catalog.last_snapshot_id(NEARDUP_FEATURES_TABLE)
-    else:
-        sid_f = catalog.append(
-            feat.select("id", "sig", F.col("_sh").alias("sh")),
-            NEARDUP_FEATURES_TABLE,
-            summary={"kind": "neardup_features", "id_col": id_col, **tag},
-        )
-    if batch_ref is not None and _update_applied(
-        catalog, NEARDUP_BANDS_TABLE, batch_ref
-    ):
-        sid_b = catalog.last_snapshot_id(NEARDUP_BANDS_TABLE)
-    else:
-        sid_b = catalog.append(
-            minhash_band_hashes(feat.select("id", "sig")),
-            NEARDUP_BANDS_TABLE,
-            cluster_by=["band_hash"],
-            summary={"kind": "neardup_bands", "id_col": id_col, **tag},
-        )
+    try:
+        if batch_ref is not None and _update_applied(
+            catalog, NEARDUP_FEATURES_TABLE, batch_ref
+        ):
+            sid_f = catalog.last_snapshot_id(NEARDUP_FEATURES_TABLE)
+        else:
+            sid_f = catalog.append(
+                feat.select("id", "sig", F.col("_sh").alias("sh")),
+                NEARDUP_FEATURES_TABLE,
+                summary={"kind": "neardup_features", "id_col": id_col, **tag},
+            )
+        if batch_ref is not None and _update_applied(
+            catalog, NEARDUP_BANDS_TABLE, batch_ref
+        ):
+            sid_b = catalog.last_snapshot_id(NEARDUP_BANDS_TABLE)
+        else:
+            sid_b = catalog.append(
+                minhash_band_hashes(feat.select("id", "sig")),
+                NEARDUP_BANDS_TABLE,
+                cluster_by=["band_hash"],
+                summary={"kind": "neardup_bands", "id_col": id_col, **tag},
+            )
+    finally:
+        feat.unpersist()
     return {"features": sid_f, "bands": sid_b}
 
 
@@ -697,7 +705,6 @@ def neardup_pairs_against_index(
     min_est: float = MIN_EST_SIM,
     min_jaccard: float = MIN_JACCARD,
     max_bucket: int | None = MAX_LSH_BUCKET,
-    cache_features: bool = True,
 ) -> DataFrame:
     """:func:`minhash_lsh_pairs_against` served from the COMMITTED
     index: the corpus side's features and bands are read from the
@@ -706,9 +713,7 @@ def neardup_pairs_against_index(
     is bit-identical to the inline operator over the same corpus by
     construction (shared :func:`_pairs_between` core; pinned by
     test)."""
-    fd = _minhash_features(delta, id_col, text_col)
-    if cache_features:
-        fd = persist_tracked(fd)
+    fd = persist_tracked(_minhash_features(delta, id_col, text_col))
     fc = catalog.read(spark, NEARDUP_FEATURES_TABLE).select(
         "id", "sig", F.col("sh").alias("_sh")
     )

@@ -12,32 +12,33 @@ Common-Crawl-style pages:
       -> records envelope (id, source, timestamp, level, message,
          metadata, category, lang, parse_ok, url, warc_ts)
 
-Three interchangeable parse implementations, tested equal on the corpus:
+Three parse implementations, tested equal on the corpus:
 
-- ``impl="arrow"`` (spec-exact reference semantics): one vectorized
-  pandas UDF; JSON lines via C-json loads with exact leftover-keys
-  semantics, access lines via vectorized ``str.extract`` grok regex.
-- ``impl="native"``: pure built-in functions (``from_json`` /
-  ``regexp_extract`` / ``try_to_timestamp``), whole-stage-codegen'd,
-  zero Python. Used as a differential twin and as the fast path when
-  exact leftover-keys fidelity is not required.
-- ``impl="hybrid"``: grok/regex lines AND provably from_json-exact
-  flat JSON lines through codegen; only the JSON lines from_json can't
-  serve byte-exactly (nested values, escapes, floats/nulls, duplicated
-  envelope keys, exotic timestamps, malformed tails) cross into the
-  Arrow UDF — with flat UDF output so no Python dict ever crosses into
-  an Arrow map. The router (:func:`hybrid_needs_python`) is
-  conservative: any doubt routes the line to the spec-exact UDF.
+- ``impl="arrow"`` — the spec-exact reference: one vectorized pandas
+  UDF; JSON lines via C-json loads with exact leftover-keys semantics,
+  access lines via vectorized ``str.extract`` grok regex. The default
+  of ``parse_records``, ``bench.py`` and the streaming entry points.
+- ``impl="native"`` — the zero-Python twin: pure built-in functions
+  (``from_json`` / ``regexp_extract`` / ``try_to_timestamp``),
+  whole-stage-codegen'd. A differential check on the reference.
+- ``impl="hybrid"`` — the parser registry's default ``("access",
+  "json")`` chain (:mod:`.parsers`), the one assembly the product
+  pipeline and a configured chain both run. Access lines AND provably
+  from_json-exact flat JSON lines stay in codegen; only the JSON lines
+  from_json can't serve byte-exactly (nested values, escapes,
+  floats/nulls, duplicated envelope keys, exotic timestamps, malformed
+  tails) cross into the Arrow UDF, with flat UDF output so no Python
+  dict ever crosses into an Arrow map. The router
+  (:func:`hybrid_needs_python`) is conservative: any doubt routes the
+  line to the spec-exact UDF, and ~98% of corpus rows never leave the
+  JVM.
 
-The e2e benchmark defaults to impl="arrow" (env SPARK_GRAFT_PARSE_IMPL
-to override): with every per-line scalar materialized once (see the
-materialization note below), arrow measures both the fastest and the
+On the e2e benchmark arrow measures both the fastest and the
 best-scaling on this box — parse-stage T_N/T_4N 3.56x vs native 3.28x
 / hybrid 3.29x (scripts/parse_ablation.py; BENCH/BASELINE.md) — since
 a single Arrow crossing amortizes better than per-row queueing of
-pass-through columns around the hybrid's Python node. hybrid remains
-the right shape where Python worker memory is the binding constraint
-(98% of rows never leave the JVM).
+pass-through columns around the hybrid's Python node. hybrid is the
+right shape where Python worker memory is the binding constraint.
 
 Error tolerance contract (reference: engine/processor.go:99-102 +
 processor/json.go:48-67): a line whose parse fails is NEVER dropped and
@@ -137,7 +138,7 @@ def empty_metadata() -> Column:
 _WS = r"[ \t\r]*"  # JSON-legal intra-line whitespace ONLY: \s would also
 # match \x0b/\f, which both json.loads and Jackson reject — the match
 # must PROVE the line is valid JSON to both parsers, since the router
-# never consults from_json's success (see _simple_json_exprs).
+# never consults from_json's success (see hybrid_needs_python).
 _SIMPLE_VAL = (
     # strings: no escapes, no raw control chars (both parsers reject
     # unescaped control chars; the match must imply validity).
@@ -355,7 +356,8 @@ _parse_line_udf = F.pandas_udf(_parse_batch, PARSED_LINE_FLAT_STRUCT)
 
 
 # --------------------------------------------------------------------------
-# hybrid: JSON contract in Python (flat Arrow output), grok in codegen
+# JSON-only Arrow UDF: the registry json parser's spec-exact fallback
+# (parsers.py), flat Arrow output
 # --------------------------------------------------------------------------
 
 def _parse_json_only_batch(line: pd.Series) -> pd.DataFrame:
@@ -425,9 +427,10 @@ _parse_json_only_udf = F.pandas_udf(_parse_json_only_batch, JSON_LINE_STRUCT)
 def _access_exprs(line: Column) -> dict[str, Column]:
     """Codegen'd access-line grok: ok/ts/level/message/metadata columns.
 
-    Shared by the native twin and the hybrid path. Spark executes one
-    compiled regex per extract; Tungsten keeps it cache-resident — this
-    is the branch whose total CPU stays flat from 8 to 32 cores.
+    Shared by the native twin and the registry's access parser
+    (parsers.py). Spark executes one compiled regex per extract;
+    Tungsten keeps it cache-resident — this is the branch whose total
+    CPU stays flat from 8 to 32 cores.
     """
     acc_ts = F.try_to_timestamp(
         F.regexp_extract(line, ACCESS_RE_SPARK, _G_TS), F.lit(APACHE_TS_SPARK)
@@ -452,53 +455,6 @@ def _access_exprs(line: Column) -> dict[str, Column]:
     }
 
 
-def _simple_json_exprs(line: Column) -> dict[str, Column]:
-    """Codegen'd JSON parse for PROVABLY from_json-exact lines.
-
-    ``ok`` is true only when every per-row contract check passes under
-    conditions where from_json's output is byte-identical to the Arrow
-    UDF's (see SIMPLE_JSON_RE commentary): flat object, benign value
-    tokens, no duplicated envelope keys, RFC3339-shaped string timestamp
-    that Spark's narrow `X`-offset format actually parses. Any simple
-    line failing a check is NOT claimed here — the router sends it to
-    the spec-exact UDF instead, so over-claiming is impossible.
-    """
-    ok = _simple_ok_exprs(line)["ok"]
-    m = F.from_json(line, "map<string,string>")
-    msg_is_str = line.rlike(r'"message"\s*:\s*"')
-    return {
-        "ok": ok,
-        "ts": F.try_to_timestamp(
-            F.regexp_extract(line, TS_VALUE_RE, 1), F.lit(RFC3339_SPARK)
-        ),
-        "level": parse_level_col(m["level"]),
-        "message": F.when(msg_is_str, F.coalesce(m["message"], F.lit(""))).otherwise(F.lit("")),
-        "metadata": F.map_filter(m, lambda k, _: ~k.isin(*ENVELOPE_KEYS)),
-    }
-
-
-def _simple_ok_exprs(line: Column) -> dict[str, Column]:
-    """The routing verdict, REGEX-ONLY: no from_json dependency.
-
-    A SIMPLE_JSON_RE match PROVES the line is valid JSON to both
-    json.loads and Jackson (values have no escapes / control chars / bad
-    number forms, whitespace is JSON-legal), so from_json success need
-    not be consulted — which keeps the verdict out of the map-building
-    expression and lets the hybrid plan defer from_json to AFTER the
-    Arrow crossing, for claimed rows only. ``ts_raw``/``ts`` are the raw
-    timestamp text and its parse — for SIMPLE lines raw text == decoded
-    value (backslash-free), and ENV_DUP_RE rejection makes the first
-    occurrence the only one.
-    """
-    ts_raw = F.regexp_extract(line, TS_VALUE_RE, 1)
-    ts_parsed = F.try_to_timestamp(ts_raw, F.lit(RFC3339_SPARK))
-    return {
-        "ok": _simple_ok_from(line, ts_raw, ts_parsed),
-        "ts_raw": ts_raw,
-        "ts": ts_parsed,
-    }
-
-
 def _simple_ok_from(line: Column, ts_raw: Column, ts_parsed: Column) -> Column:
     """The verdict conjuncts over (possibly pre-materialized) inputs."""
     return (
@@ -518,80 +474,39 @@ def hybrid_needs_python(line: Column) -> Column:
     so the mandatory Arrow-UDF stage keeps its spec-exact role while
     ~98% of rows stay inside whole-stage codegen (the scaling-efficient
     shape, BENCH/BASELINE.md).
+
+    The verdict is REGEX-ONLY: a SIMPLE_JSON_RE match PROVES the line is
+    valid JSON to both json.loads and Jackson (values have no escapes /
+    control chars / bad number forms, whitespace is JSON-legal), so
+    from_json success need not be consulted — which keeps the verdict
+    out of the map-building expression and lets the json parser
+    (parsers.py) defer from_json to AFTER the Arrow crossing, for
+    claimed rows only. For SIMPLE lines the raw timestamp text equals
+    the decoded value (backslash-free), and ENV_DUP_RE rejection makes
+    its first occurrence the only one.
     """
-    return line.rlike(r"^\s*\{") & ~_simple_json_exprs(line)["ok"]
+    ts_raw = F.regexp_extract(line, TS_VALUE_RE, 1)
+    ts_parsed = F.try_to_timestamp(ts_raw, F.lit(RFC3339_SPARK))
+    return line.rlike(r"^\s*\{") & ~_simple_ok_from(line, ts_raw, ts_parsed)
 
 
 # --------------------------------------------------------------------------
-# materialized codegen plans (impl="hybrid" / impl="native")
-#
-# The expensive per-line scalars — the access regex + timestamp parse,
-# the from_json map, the JSON timestamp parse, the routing verdicts, the
-# UDF output struct — are each materialized ONCE as an intermediate
-# column, and the final field assembly references only those attributes.
-# Nesting the expensive expressions directly inside the per-field
-# CASE/WHEN chains instead re-evaluates them once per field per row:
-# Spark's subexpression elimination skips conditionally-evaluated
-# branches, and CollapseProject will not deduplicate non-cheap
-# expressions, so the naive struct assembly measured ~5x the CPU of one
-# evaluation (scripts/parse_ablation.py). Catalyst keeps these Projects
-# separate (the intermediates are non-cheap and multiply referenced),
-# all inside one WholeStageCodegen span — no shuffle, no extra pass.
+# built-in-functions twin (impl="native") — zero Python, fully codegen'd
 # --------------------------------------------------------------------------
-
-def _with_access_cols(lines: DataFrame) -> DataFrame:
-    """Materialize the access-branch verdict once: _ats, _aok."""
-    line = F.col("line")
-    return lines.withColumn(
-        "_ats",
-        F.try_to_timestamp(
-            F.regexp_extract(line, ACCESS_RE_SPARK, _G_TS), F.lit(APACHE_TS_SPARK)
-        ),
-    ).withColumn("_aok", line.rlike(ACCESS_RE_SPARK) & F.col("_ats").isNotNull())
-
-
-def _hybrid_frame(lines: DataFrame) -> DataFrame:
-    """Materialize the hybrid routing columns (see block comment above).
-
-    ``_sok`` is exactly :func:`_simple_json_exprs`'s ``ok`` (same
-    conjuncts over the materialized map/timestamp); the UDF input set is
-    exactly :func:`hybrid_needs_python` (JSON candidates minus the
-    provably from_json-exact ones).
-    """
-    line = F.col("line")
-    return (
-        _with_access_cols(lines)
-        .withColumn("_isj", line.rlike(r"^\s*\{"))
-        # timestamp from raw text: for claimed (SIMPLE) lines raw ==
-        # decoded, so no map is needed to decide routing — and therefore
-        # no map column crosses the Arrow node below.
-        .withColumn(
-            "_tsr", F.when(F.col("_isj"), F.regexp_extract(line, TS_VALUE_RE, 1))
-        )
-        .withColumn(
-            "_mts", F.try_to_timestamp(F.col("_tsr"), F.lit(RFC3339_SPARK))
-        )
-        .withColumn(
-            "_sok",
-            F.col("_isj")
-            & _simple_ok_from(line, F.col("_tsr"), F.col("_mts")),
-        )
-        .withColumn(
-            "_jp",
-            _parse_json_only_udf(F.when(F.col("_isj") & ~F.col("_sok"), line)),
-        )
-        # the map, computed AFTER the crossing and only for claimed rows
-        .withColumn(
-            "_m", F.when(F.col("_sok"), F.from_json(line, "map<string,string>"))
-        )
-    )
-
 
 def _native_frame(lines: DataFrame) -> DataFrame:
-    """Materialize the native-twin columns: _m/_mts/_jok (zero Python)."""
+    """Materialize the native-twin columns once (the materialization
+    rule at parsers.records_from_lines): _ats/_aok, _m/_mts/_jok."""
     line = F.col("line")
     return (
-        _with_access_cols(lines)
+        lines.withColumn(
+            "_ats",
+            F.try_to_timestamp(
+                F.regexp_extract(line, ACCESS_RE_SPARK, _G_TS),
+                F.lit(APACHE_TS_SPARK),
+            ),
+        )
+        .withColumn("_aok", line.rlike(ACCESS_RE_SPARK) & F.col("_ats").isNotNull())
         .withColumn(
             "_m",
             F.when(line.rlike(r"^\s*\{"), F.from_json(line, "map<string,string>")),
@@ -681,10 +596,6 @@ def _assembled_fields(
 
 
 # --------------------------------------------------------------------------
-# built-in-functions twin (impl="native") — zero Python, fully codegen'd
-# --------------------------------------------------------------------------
-
-# --------------------------------------------------------------------------
 # public entry
 # --------------------------------------------------------------------------
 
@@ -693,14 +604,20 @@ def parse_records(
 ) -> DataFrame:
     """Full parse stage: pages -> records envelope (RECORDS_SCHEMA).
 
-    ``impl``: "arrow" (spec-exact pandas UDF), "native" (built-ins
-    twin), or "hybrid" (codegen grok + JSON-only Arrow UDF — the
-    scaling-efficient default for the e2e pipeline). All three are
-    oracle-checked equal on the corpus.
+    ``impl``: "arrow" (the spec-exact pandas UDF reference), "native"
+    (the zero-Python built-ins twin), or "hybrid" — the parser
+    registry's default ``("access", "json")`` chain, i.e.
+    ``parsers.parse_records_chain(pages)``, which ``Pipeline`` runs by
+    default. All three are oracle-checked equal on the corpus.
     ``use_html``: parse lines extracted from the html binary instead of
     the text column (fidelity invariant makes them identical).
     """
     lines = explode_lines(pages, use_html=use_html)
+    if impl == "hybrid":
+        # imported here: parsers.py imports this module at load time
+        from .parsers import records_from_lines
+
+        return records_from_lines(lines, ("access", "json"))
     if impl == "arrow":
         parsed = _parse_line_udf(F.col("line"), F.col("warc_ts"))
         fields = {
@@ -720,23 +637,6 @@ def parse_records(
         fields = _assembled_fields([
             (F.col("_jok"), "json", {"ts": F.col("_mts"), **_json_map_fields(F.col("_m"))}),
             (F.col("_aok"), "access", {"ts": F.col("_ats"), **{k: acc[k] for k in ("level", "message", "metadata")}}),
-        ])
-    elif impl == "hybrid":
-        # only JSON candidates from_json can't PROVABLY serve byte-exactly
-        # cross into Python (nulls are free in Arrow); simple flat-JSON
-        # lines and the grok branch never leave the JVM
-        lines = _hybrid_frame(lines)
-        acc = _access_exprs(F.col("line"))
-        jp = F.col("_jp")
-        fields = _assembled_fields([
-            (F.col("_aok"), "access", {"ts": F.col("_ats"), **{k: acc[k] for k in ("level", "message", "metadata")}}),
-            (F.col("_sok"), "json", {"ts": F.col("_mts"), **_json_map_fields(F.col("_m"))}),
-            (jp["ok"], "json", {
-                "ts": jp["timestamp"],
-                "level": jp["level"],
-                "message": jp["message"],
-                "metadata": F.from_json(jp["metadata_json"], "map<string,string>"),
-            }),
         ])
     else:
         raise ValueError(f"unknown parse impl: {impl!r}")

@@ -41,11 +41,11 @@ from pyspark.sql import functions as F
 
 from ..functions.levels import parse_level_col
 from .parse import (
-    ENVELOPE_KEYS,
     JSON_LINE_STRUCT,
     RFC3339_SPARK,
     TS_VALUE_RE,
     _access_exprs,
+    _json_map_fields,
     _parse_json_only_udf,
     _simple_ok_from,
     empty_metadata,
@@ -144,7 +144,7 @@ class GrokParser:
                 f"groups but {n} named; use (?:...) for grouping"
             )
         # ONE regex evaluation per row (the repo's materialization rule,
-        # parse.py block comment: Spark does not deduplicate non-cheap
+        # records_from_lines comment: Spark does not deduplicate non-cheap
         # expressions, so per-group regexp_extract costs N+1 regex runs
         # per row). A full-line regexp_replace substitutes every group
         # in one pass — sentinel first, groups joined by an ASCII
@@ -283,12 +283,17 @@ class _AccessBuiltin:
 @dataclass(frozen=True)
 class _JsonBuiltin:
     """The hybrid JSON parser: codegen for provably from_json-exact
-    lines, the spec-exact Arrow UDF for the rest (see parse.py).
+    lines, the spec-exact Arrow UDF for the rest — the JSON half of
+    ``parse_records(impl="hybrid")`` (the router is
+    ``parse.hybrid_needs_python``).
 
     Materializes its expensive scalars — the regex-only routing verdict,
     the JSON timestamp parse, the from_json map (built only for claimed
     rows, AFTER the Arrow crossing so no map crosses the Python node) —
-    as helper columns, exactly like parse.py's ``_hybrid_frame``.
+    as helper columns (the rule at :func:`records_from_lines`). Claimed
+    lines take their level/message/metadata from
+    ``parse._json_map_fields``, whose NULL-map defense keeps a claimed
+    row's metadata non-NULL.
     """
 
     name: str = "json"
@@ -323,27 +328,16 @@ class _JsonBuiltin:
                 "_jm", F.when(F.col("_jsok"), F.from_json(line, _EMPTY_MAP))
             )
         )
-        sok, j, m = F.col("_jsok"), F.col("_jp"), F.col("_jm")
+        sok, j = F.col("_jsok"), F.col("_jp")
         pick = lambda a, b: F.when(sok, a).otherwise(b)  # noqa: E731
-        msg_is_str = line.rlike(r'"message"\s*:\s*"')
+        claimed_fields = _json_map_fields(F.col("_jm"))
         return lines, {
             "ok": sok | F.coalesce(j["ok"], F.lit(False)),
             "ts": pick(F.col("_jmts"), j["timestamp"]),
-            "level": pick(parse_level_col(m["level"]), j["level"]),
-            "message": pick(
-                F.when(msg_is_str, F.coalesce(m["message"], F.lit(""))).otherwise(
-                    F.lit("")
-                ),
-                j["message"],
-            ),
+            "level": pick(claimed_fields["level"], j["level"]),
+            "message": pick(claimed_fields["message"], j["message"]),
             "metadata": pick(
-                # coalesce: if the regex-only verdict ever admits a line
-                # Jackson rejects, the claimed row gets the EMPTY map,
-                # never NULL metadata (see parse._json_map_fields)
-                F.coalesce(
-                    F.map_filter(m, lambda k, _: ~k.isin(*ENVELOPE_KEYS)),
-                    empty_metadata(),
-                ),
+                claimed_fields["metadata"],
                 F.from_json(j["metadata_json"], _EMPTY_MAP),
             ),
         }
@@ -384,9 +378,8 @@ def parse_records_chain(
     """pages -> records envelope through the registered parser chain.
 
     Chain order = claim precedence (the reference applies processors in
-    configured order, engine/processor.go:91-107). With the default
-    chain this is semantically the hybrid impl of
-    :func:`..parse.parse_records` (differentially tested equal).
+    configured order, engine/processor.go:91-107). The default chain
+    is ``parse_records(pages, impl="hybrid")``.
     """
     return records_from_lines(explode_lines(pages, use_html=use_html), chain)
 
@@ -402,12 +395,20 @@ def records_from_lines(
     line. Works identically on batch and streaming frames (stateless
     narrow transforms only).
     """
-    # Materialize each parser's verdict and (conditionally) its value
-    # struct as real columns, then assemble the envelope from cheap
-    # attribute references — evaluating a parser's expressions directly
-    # inside the per-field CASE/WHEN chains would re-run them once per
-    # field per row (Spark does not deduplicate non-cheap expressions
-    # across conditional branches; see parse.py's materialization note).
+    # Materialize expensive scalars once. Each parser materializes its
+    # own (the access verdict, the from_json map, the timestamp parses,
+    # the routing verdict, the UDF output struct) as helper columns, and
+    # this assembler materializes each parser's verdict and
+    # (conditionally) its value struct; the envelope then references
+    # only those attributes. Nesting the expensive expressions directly
+    # inside the per-field CASE/WHEN chains instead re-evaluates them
+    # once per field per row: Spark's subexpression elimination skips
+    # conditionally-evaluated branches, and CollapseProject will not
+    # deduplicate non-cheap expressions, so the naive struct assembly
+    # measured ~5x the CPU of one evaluation (scripts/parse_ablation.py).
+    # Catalyst keeps these Projects separate (the intermediates are
+    # non-cheap and multiply referenced), all inside one
+    # WholeStageCodegen span — no shuffle, no extra pass.
     claimed: Column = F.lit(False)
     oks: list[Column] = []
     for i, name in enumerate(chain):

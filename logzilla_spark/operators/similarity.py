@@ -550,7 +550,6 @@ def semdedup(
     threshold: float = COSINE_THRESHOLD,
     n_cells: int = IVF_CELLS,
     max_cell: int = MAX_SEMDEDUP_CELL,
-    cache_assign: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup via embedding
     clusters — assign every vector to its nearest coarse-quantizer
@@ -602,8 +601,7 @@ def semdedup(
     # — the minhash_lsh_pairs persist rationale verbatim; rows are one
     # embedding + three scalars, MEMORY_AND_DISK spills instead of
     # OOMing, lineage recomputes on executor loss.
-    if cache_assign:
-        assigned = persist_tracked(assigned)
+    assigned = persist_tracked(assigned)
     sizes = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("_csz"))
     small = assigned.join(F.broadcast(sizes), "cell").filter(
         F.col("_csz") <= int(max_cell)

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from logzilla_spark.functions.caching import persist_tracked
 from logzilla_spark.operators import cluster, dedup, textstats
@@ -95,23 +96,30 @@ def materialize_training_run(
     (input -> near-dup kept -> curated examples), token totals and the
     per-shard row counts — the audit record a training-data run
     always produces, computed from ONE aggregation over the examples
-    plus one count of the input (no per-stage corpus rescan)."""
-    ex = persist_tracked(training_examples(docs, **kw))
-    snap = catalog.overwrite(
-        ex,
-        name + TRAIN_EXAMPLES_SUFFIX,
-        cluster_by=["shard", "pos"],
-        summary={"kind": "train_examples", **{k: str(v) for k, v in kw.items()}},
-    )
-    shards_rows = (
-        ex.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("n_tokens").alias("n_tokens"),
+    plus one count of the input (no per-stage corpus rescan).
+
+    The commit and the manifest aggregation both run here, so the
+    examples frame is persisted and released in ``finally``
+    (functions/caching.py)."""
+    ex = training_examples(docs, **kw).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        snap = catalog.overwrite(
+            ex,
+            name + TRAIN_EXAMPLES_SUFFIX,
+            cluster_by=["shard", "pos"],
+            summary={"kind": "train_examples", **{k: str(v) for k, v in kw.items()}},
         )
-        .orderBy("shard")
-        .collect()
-    )
+        shards_rows = (
+            ex.groupBy("shard")
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum("n_tokens").alias("n_tokens"),
+            )
+            .orderBy("shard")
+            .collect()
+        )
+    finally:
+        ex.unpersist()
     return {
         "snapshot_id": snap,
         "table": name + TRAIN_EXAMPLES_SUFFIX,

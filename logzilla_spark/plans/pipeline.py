@@ -149,7 +149,9 @@ class Pipeline:
         """``parse_impl``: one of the built-in impl names ('arrow' /
         'native' / 'hybrid'), or a tuple of registered parser names —
         the config-driven per-source processor chain
-        (reference: config/config.go:45-50).
+        (reference: config/config.go:45-50). The default 'hybrid' is
+        the registry's ``("access", "json")`` chain, run through
+        ``parse_records`` (see operators/parse.py).
 
         ``quota`` ({"quota": N, "key": col, "window": unit}) enables
         the T77 ingest guard: over-quota records are RE-ROUTED to the

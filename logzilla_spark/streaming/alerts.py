@@ -158,7 +158,6 @@ def start_alert_stream(
     checkpoint_dir: str,
     rules: list[AlertRule],
     watermark: str = "10 minutes",
-    parse_impl: str = "arrow",
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
@@ -172,9 +171,7 @@ def start_alert_stream(
     from .stream_pipeline import stream_pages, streaming_windowed_counts
 
     cat = LocalCatalog(warehouse)
-    records = parse_records(
-        stream_pages(spark, pages_dir, max_files_per_trigger), impl=parse_impl
-    )
+    records = parse_records(stream_pages(spark, pages_dir, max_files_per_trigger))
     agg = streaming_windowed_counts(records, watermark=watermark)
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
@@ -315,7 +312,6 @@ def start_anomaly_alert_stream(
     z_threshold: float = 3.0,
     min_history: int = 12,
     watermark: str = "10 minutes",
-    parse_impl: str = "arrow",
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
@@ -333,9 +329,7 @@ def start_anomaly_alert_stream(
     )
 
     cat = LocalCatalog(warehouse)
-    records = parse_records(
-        stream_pages(spark, pages_dir, max_files_per_trigger), impl=parse_impl
-    )
+    records = parse_records(stream_pages(spark, pages_dir, max_files_per_trigger))
     agg = streaming_windowed_counts(records, watermark=watermark)
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
@@ -443,7 +437,6 @@ def start_absence_alert_stream(
     checkpoint_dir: str,
     silence_hours: int = 2,
     watermark: str = "10 minutes",
-    parse_impl: str = "arrow",
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
@@ -458,9 +451,7 @@ def start_absence_alert_stream(
     )
 
     cat = LocalCatalog(warehouse)
-    records = parse_records(
-        stream_pages(spark, pages_dir, max_files_per_trigger), impl=parse_impl
-    )
+    records = parse_records(stream_pages(spark, pages_dir, max_files_per_trigger))
     agg = streaming_windowed_counts(records, watermark=watermark)
 
     def _sink(batch: DataFrame, batch_id: int) -> None:

@@ -110,15 +110,12 @@ def start_search_stream(
     pages_dir: str,
     warehouse: str,
     checkpoint_dir: str,
-    parse_impl: str = "arrow",
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
     """pages stream -> parse -> committed records + live fulltext index."""
     cat = LocalCatalog(warehouse)
-    records = parse_records(
-        stream_pages(spark, pages_dir, max_files_per_trigger), impl=parse_impl
-    )
+    records = parse_records(stream_pages(spark, pages_dir, max_files_per_trigger))
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         upsert_search_batch(batch.sparkSession, cat, batch, batch_id)

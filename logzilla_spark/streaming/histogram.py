@@ -115,7 +115,6 @@ def start_hist_stream(
     checkpoint_dir: str,
     keys: tuple[str, ...] = DEFAULT_KEYS,
     value_expr: str = DEFAULT_VALUE_EXPR,
-    parse_impl: str = "arrow",
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
@@ -124,9 +123,7 @@ def start_hist_stream(
     grows with key cardinality and value RANGE (octaves), never with
     input size."""
     cat = LocalCatalog(warehouse)
-    records = parse_records(
-        stream_pages(spark, pages_dir, max_files_per_trigger), impl=parse_impl
-    )
+    records = parse_records(stream_pages(spark, pages_dir, max_files_per_trigger))
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         upsert_hist_batch(

@@ -150,7 +150,6 @@ def start_metrics_stream(
     checkpoint_dir: str,
     value_col: str = "m_size",
     key_col: str = "source",
-    parse_impl: str = "arrow",
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
@@ -161,9 +160,7 @@ def start_metrics_stream(
     from logzilla_spark.operators.parse import parse_records
 
     cat = LocalCatalog(warehouse)
-    records = parse_records(
-        stream_pages(spark, pages_dir, max_files_per_trigger), impl=parse_impl
-    )
+    records = parse_records(stream_pages(spark, pages_dir, max_files_per_trigger))
     flat = records.select(
         "timestamp",
         F.col("source"),

@@ -112,7 +112,6 @@ def start_hll_stream(
     checkpoint_dir: str,
     keys: tuple[str, ...] = DEFAULT_KEYS,
     value_expr: str = DEFAULT_VALUE_EXPR,
-    parse_impl: str = "arrow",
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
@@ -120,9 +119,7 @@ def start_hll_stream(
     committed sketch. No watermark needed: the sketch never evicts —
     its state does not grow with input, only with key cardinality."""
     cat = LocalCatalog(warehouse)
-    records = parse_records(
-        stream_pages(spark, pages_dir, max_files_per_trigger), impl=parse_impl
-    )
+    records = parse_records(stream_pages(spark, pages_dir, max_files_per_trigger))
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         upsert_hll_batch(

@@ -204,7 +204,6 @@ def start_routing_stream(
     pages_dir: str,
     warehouse: str,
     checkpoint_dir: str,
-    parse_impl: str = "arrow",
     use_html: bool = False,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
@@ -217,7 +216,7 @@ def start_routing_stream(
     """
     cat = LocalCatalog(warehouse)
     pages = stream_pages(spark, pages_dir, max_files_per_trigger)
-    records = parse_records(pages, impl=parse_impl, use_html=use_html)
+    records = parse_records(pages, use_html=use_html)
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         route_batch(batch, cat, query_id="route", batch_id=batch_id)
@@ -412,7 +411,6 @@ def start_agg_stream(
     warehouse: str,
     checkpoint_dir: str,
     watermark: str = "10 minutes",
-    parse_impl: str = "arrow",
     available_now: bool = True,
 ) -> StreamingQuery:
     """pages stream -> parse -> watermarked windowed counts, upserted.
@@ -433,7 +431,7 @@ def start_agg_stream(
     """
     cat = LocalCatalog(warehouse)
     pages = stream_pages(spark, pages_dir)
-    records = parse_records(pages, impl=parse_impl)
+    records = parse_records(pages)
     agg = streaming_windowed_counts(records, watermark=watermark)
 
     def _upsert(batch: DataFrame, batch_id: int) -> None:

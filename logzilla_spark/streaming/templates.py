@@ -169,7 +169,6 @@ def start_templates_stream(
     pages_dir: str,
     warehouse: str,
     checkpoint_dir: str,
-    parse_impl: str = "arrow",  # noqa: ARG001 — lines need no parse chain
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:

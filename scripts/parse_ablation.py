@@ -80,9 +80,7 @@ def main() -> None:
         & F.size(P._access_exprs(F.col("line"))["metadata"]).isNotNull()
     )
     variants["simple_rlike"] = lines.where(F.col("line").rlike(P.SIMPLE_JSON_RE))
-    variants["simple_full"] = lines.where(
-        P._simple_json_exprs(F.col("line"))["ok"]
-    )
+    variants["needs_python"] = lines.where(P.hybrid_needs_python(F.col("line")))
     variants["envdup_rlike"] = lines.where(~F.col("line").rlike(P.ENV_DUP_RE))
     variants["from_json_map"] = lines.where(
         F.from_json(F.col("line"), "map<string,string>").isNotNull()

@@ -85,7 +85,7 @@ def main() -> None:
         n, t = cnt(raw.select("doc_a", "doc_b").distinct())
         r["cand_distinct_rows"], r["cand_distinct_s"] = n, t
         sc.setJobDescription("minhash: full pairs (warm cache)")
-        n, t = cnt(dedup.minhash_lsh_pairs(docs, cache_features=True))
+        n, t = cnt(dedup.minhash_lsh_pairs(docs))
         r["pairs_rows"], r["pairs_warm_s"] = n, t
         spark.catalog.clearCache()
         sc.setJobDescription("minhash: full pairs (cold)")

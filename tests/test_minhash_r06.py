@@ -73,7 +73,7 @@ def test_pairs_output_schema_unchanged(spark):
          for i in range(8)],
         "doc_id long, text string",
     )
-    pairs = dedup.minhash_lsh_pairs(df, cache_features=False)
+    pairs = dedup.minhash_lsh_pairs(df)
     assert [f for f, _ in pairs.dtypes] == [
         "doc_a", "doc_b", "est_sim", "inter_n", "union_n", "jaccard"
     ]

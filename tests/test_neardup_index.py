@@ -144,3 +144,24 @@ def test_update_crash_between_appends_heals(spark, cat, corpus):
     probe = _mk(spark, [(700, " ".join(f"c{i}" for i in range(30)))])
     pairs = dedup.neardup_pairs_against_index(probe, cat, spark).toPandas()
     assert 600 in set(pairs.doc_old)
+
+
+def test_build_and_update_release_their_feature_cache(spark, cat):
+    """Both index writers run their own catalog commits, so they persist
+    the feature frame and release it before returning (the
+    functions/caching.py policy for self-acting operators): nothing is
+    left in the lazy-plan registry or the cache manager."""
+    from pyspark.storagelevel import StorageLevel
+
+    from logzilla_spark.functions import caching
+
+    corpus = _mk(spark, [(300 + i, _doc(i + 11)) for i in range(8)])
+    batch = _mk(spark, [(400 + j, _doc(j + 23, mutate=j)) for j in range(4)])
+    n = len(caching._TRACKED)
+    dedup.build_neardup_index(corpus, cat)
+    assert len(caching._TRACKED) == n
+    dedup.update_neardup_index(batch, cat, batch_ref="b-cache")
+    assert len(caching._TRACKED) == n
+    for df in (corpus, batch):
+        feat = dedup._minhash_features(df, "doc_id", "text")
+        assert feat.storageLevel == StorageLevel.NONE

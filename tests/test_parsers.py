@@ -1,9 +1,10 @@
 """Pluggable parser registry (operators/parsers.py — the Lua slot).
 
-Covers: default chain == hybrid impl (differential), a user-registered
-grok format claiming the unparsed tail, a PandasParser (Arrow slot)
-for a format regex can't comfortably express, never-drop tolerance,
-and registry error handling.
+Covers: default chain == the arrow reference on every router edge
+line (differential; the chain is parse_records' impl="hybrid"), a
+user-registered grok format claiming the unparsed tail, a PandasParser
+(Arrow slot) for a format regex can't comfortably express, never-drop
+tolerance, and registry error handling.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from pyspark.sql import functions as F
 from logzilla_spark.operators import parsers as P
 from logzilla_spark.operators.parse import parse_records
 from logzilla_spark.testdata import ensure_pages
+from tests.test_property import ROUTER_EDGE_LINES
 
 T0 = datetime(2024, 1, 1)
 SF0001 = "/root/testdata/sf0.001"
@@ -35,10 +37,15 @@ def _canon(df):
     )
 
 
-def test_default_chain_equals_hybrid_impl(spark):
-    pages = _pages(spark)
+def test_default_chain_equals_arrow_on_router_edge_lines(spark):
+    """Every router edge line, on one page, every run: the hypothesis
+    test in test_property.py only samples from them."""
+    pages = spark.createDataFrame(
+        [("https://h.example/x/p0", T0, None, "\n".join(ROUTER_EDGE_LINES), "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
     assert _canon(P.parse_records_chain(pages)) == _canon(
-        parse_records(pages, impl="hybrid")
+        parse_records(pages, impl="arrow")
     )
 
 

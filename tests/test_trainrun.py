@@ -119,3 +119,20 @@ def test_materialize_commits_and_prunes(spark, docs, tmp_path):
     groups, total = cat.stats_pruned_files(name, "shard", points=[0])
     kept = sum(len(g["files"]) for g in groups)
     assert total > 1 and 0 < kept < total
+
+
+def test_materialize_releases_its_examples_cache(spark, docs, tmp_path):
+    """materialize_training_run commits and aggregates the examples
+    itself, so it persists them and releases them before returning
+    (the functions/caching.py policy for self-acting operators). The
+    lazy stages it composes (keep-best's scored frame, the curated
+    frame) still register theirs — lazy-plan policy; they sit below the
+    CC loop's checkpoint, so every call registers fresh ones — but no
+    registered frame may be the examples table."""
+    from logzilla_spark.functions import caching
+
+    cat = LocalCatalog(str(tmp_path / "wh"))
+    n = len(caching._TRACKED)
+    materialize_training_run(docs, cat, "run2", n_shards=4, seed="cache-own")
+    examples_cols = cat.read(spark, "run2" + TRAIN_EXAMPLES_SUFFIX).columns
+    assert [f for f in caching._TRACKED[n:] if f.columns == examples_cols] == []
