@@ -2,9 +2,11 @@
 
 The reference stops at parse->store (SURVEY.md §2.4 — no joins, no
 aggregation), but a web-scale corpus engine needs dedup as a
-first-class stage. Five strategies, all expressed as JVM-side Catalyst
-expressions (higher-order functions, no Python UDFs in the hot path —
-same rule as the parse stage, BASELINE.json input_hint):
+first-class stage. Five strategies. The four text ones are JVM-side
+Catalyst expressions (higher-order functions, no Python UDFs in the hot
+path — same rule as the parse stage, BASELINE.json input_hint); exact
+embedding cosine is the blocked Arrow kernel of ``functions.vectors``,
+whose pinned-order numpy sums give the bits of :func:`cosine_expr`:
 
 - exact dedup            : content-hash groupBy
 - MinHash + LSH          : char-shingle -> universal-hash signatures ->
@@ -43,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 from logzilla_spark.functions.caching import persist_tracked
+from logzilla_spark.functions.vectors import cosine_pairs_above
 
 from logzilla_spark.functions.hashing import (
     P31,
@@ -1082,41 +1085,17 @@ def embedding_neardup_pairs(
     O(n^2): correct at CI scale, the oracle for the LSH scale path
     (operators/similarity.py::embedding_neardup_lsh). At 100 TB use
     the LSH variant; this one exists to measure its recall.
+
+    Runs as the blocked Arrow kernel
+    (``functions.vectors.cosine_pairs_above``): the corpus is collected
+    once as a matrix and its row blocks are scored against it across
+    the default parallelism, with the same bits as the
+    :func:`cosine_expr` fold. The threshold is applied inside each
+    block; a NULL cosine (NULL array or element, width mismatch, zero
+    norm) drops the pair and a NaN cosine keeps it, as in DuckDB.
     """
-    # Hoist the per-vector self-dot out of the pair loop (computed once
-    # per row instead of once per pair — identical expression tree, so
-    # identical IEEE-754 bits vs the unhoisted form) and spread the
-    # O(n^2) nested-loop join across tasks: a single-file embeddings
-    # table would otherwise evaluate every pair in ONE task.
-    n_parts = emb.sparkSession.sparkContext.defaultParallelism
-    base = emb.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("_e")
-    ).withColumn("_d2", F.expr(dot_expr("_e", "_e")))
-    a = base.select(
-        F.col("vid").alias("vec_a"), F.col("_e").alias("_ea"), F.col("_d2").alias("_da")
-    ).repartition(n_parts)
-    b = base.select(
-        F.col("vid").alias("vec_b"), F.col("_e").alias("_eb"), F.col("_d2").alias("_db")
-    )
-    # try_divide: zero vectors have norm 0 (see cosine_expr note)
-    cos = f"try_divide({dot_expr('_ea', '_eb')}, sqrt(_da * _db))"
-    # The threshold lives INSIDE the join condition, not in a post-join
-    # filter: a nested-loop join only MATERIALIZES rows its condition
-    # accepts, so the O(n^2) non-duplicate majority is rejected during
-    # the loop without ever copying the two embedding arrays into an
-    # output row (measured 43s -> 20s at sf1.0 for the same 20k-vector
-    # corpus, on top of the unrolled-dot win). Survivors re-evaluate
-    # the identical deterministic
-    # expression in the projection (IEEE: same bits; NULL cosine fails
-    # the >= condition in both forms).
-    return (
-        a.join(
-            F.broadcast(b),
-            (F.col("vec_a") < F.col("vec_b"))
-            & (F.expr(cos) >= F.lit(threshold)),
-        )
-        .withColumn("cosine", F.expr(cos))
-        .select("vec_a", "vec_b", "cosine")
+    return cosine_pairs_above(
+        emb.select(id_col, vec_col), threshold, ("vec_a", "vec_b")
     )
 
 

@@ -11,16 +11,22 @@ Approximate-nearest-neighbor over ``array<float>`` embeddings:
                                buckets (the scale path for
                                dedup.embedding_neardup_pairs)
 
-All cosine math uses the sequential-fold expression from
-``operators.dedup.cosine_expr`` so the DuckDB oracle reproduces the
-exact double bits (no float-ordering drift — see that docstring).
+All cosine math is the sequential fold of ``operators.dedup.cosine_expr``
+so the DuckDB oracle reproduces the exact double bits (no float-ordering
+drift — see that docstring). Brute force runs it in the blocked Arrow
+kernel of ``functions.vectors`` (pinned-order numpy sums, same bits);
+the candidate-pair paths (LSH, IVF, SemDeDup, PQ) use ``dot_expr``.
+Self-dot note: those paths compute each side's norm term once per row,
+not once per pair; the expression tree is identical, so the bits are
+too.
 Hyperplanes come from ``functions.hashing.hyperplanes`` — md5-derived
 ±1 literals inlined into BOTH engines' plans, one source of truth.
 
 Scale notes (100 TB / 1000 executors):
 - Brute force is O(probes × corpus) — fine only when the probe side is
-  small enough to broadcast (we broadcast it explicitly). The corpus
-  side streams: no shuffle of the big table at all.
+  small enough to broadcast (the driver collects it once and ships it
+  in the kernel's closure). The corpus side streams: no shuffle of the
+  big table at all.
 - The LSH path shuffles the corpus ONCE on bucket id (uniform by
   construction — sign bits of random projections), then joins the
   (tiny, broadcast) probe multiprobe set against it. Per-bucket
@@ -35,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from logzilla_spark.functions.caching import persist_tracked, truncate
 from logzilla_spark.functions.hashing import hyperplanes
+from logzilla_spark.functions.vectors import cosine_topk_partial
 from logzilla_spark.operators.dedup import COSINE_THRESHOLD, cosine_expr, dot_expr
 
 N_PLANES = 8
@@ -114,28 +121,16 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact brute-force top-k cosine neighbors for each probe.
 
-    The probe side is broadcast; the corpus side is scanned once with
-    no shuffle. Self-matches (same id) are excluded.
+    The blocked Arrow kernel (``functions.vectors.cosine_topk_partial``):
+    the probe side is collected once as the matrix, the corpus side
+    streams with no shuffle, and each block keeps every probe's ``k``
+    best rows; :func:`_topk` ranks their union. Cosine bits are the
+    :func:`dedup.cosine_expr` fold's. Self-matches (same id) are
+    excluded; NULL cosines rank after every non-NULL one.
     """
-    # Self-dots hoisted OUT of the O(probes x corpus) pair loop: each
-    # side's norm term is computed once per ROW (identical expression
-    # tree -> identical IEEE bits vs the per-pair form, which
-    # re-evaluated both self-dots for every pair).
-    p = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("_pe")
-    ).withColumn("_pd2", F.expr(dot_expr("_pe", "_pe")))
-    c = emb.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_ce")
-    ).withColumn("_cd2", F.expr(dot_expr("_ce", "_ce")))
-    scored = (
-        c.join(F.broadcast(p), F.col("probe_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.expr(f"try_divide({dot_expr('_pe', '_ce')}, sqrt(_pd2 * _cd2))"),
-        )
-        .select("probe_id", "neighbor_id", "cosine")
-    )
-    return _topk(scored, k)
+    c = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_ce"))
+    p = probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("_pe"))
+    return _topk(cosine_topk_partial(c, p, k), k)
 
 
 def cosine_topk_lsh(
@@ -154,8 +149,8 @@ def cosine_topk_lsh(
     probe×(1+n_planes) multiprobe key set is broadcast and hash-joined
     against it. Exact cosine is computed for candidates only.
     """
-    # Self-dots hoisted out of the candidate loop (the cosine_topk
-    # note): per-row norm terms, identical bits by construction.
+    # Self-dots hoisted out of the candidate loop (the self-dot note,
+    # module docstring): per-row norm terms, identical bits.
     cb = signlsh_buckets(emb, id_col, vec_col, n_planes, dim).select(
         F.col("id").alias("neighbor_id"),
         F.col("embedding").alias("_ce"),
@@ -199,8 +194,8 @@ def embedding_neardup_lsh(
     path for ``dedup.embedding_neardup_pairs`` (which is its recall
     oracle at CI scale). One shuffle on bucket id, exact cosine verify
     inside buckets only."""
-    # Self-dots hoisted out of the per-bucket pair loop (the
-    # cosine_topk note): one norm term per row, identical bits.
+    # Self-dots hoisted out of the per-bucket pair loop (the self-dot
+    # note): one norm term per row, identical bits.
     b = signlsh_buckets(emb, id_col, vec_col, n_planes, dim).withColumn(
         "_d2", F.expr(dot_expr("embedding", "embedding", dim))
     )
@@ -312,7 +307,7 @@ def ivf_assign(
     corpus."""
     # Vector self-dot hoisted out of the k-candidate loop; seed
     # self-dots computed once per seed row (identical bits — the
-    # cosine_topk note).
+    # self-dot note).
     a = (
         emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("embedding"))
         .withColumn("_ed2", F.expr(dot_expr("embedding", "embedding")))
@@ -354,7 +349,7 @@ def probe_nearest_cells(
     over the (tiny) probe side only — shared by every IVF-family
     query path and the persisted-index server (operators.ann_index)."""
     # Probe self-dot hoisted out of the k-candidate loop (identical
-    # bits — the cosine_topk note).
+    # bits — the self-dot note).
     pc = (
         probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("_pe"))
         .withColumn("_pd2", F.expr(dot_expr("_pe", "_pe")))
@@ -578,7 +573,7 @@ def semdedup(
     seeds = ivf_seeds(emb, n_cells, id_col, vec_col)
     # Self-dot hoisted and CARRIED through the persisted assignment
     # (_d2): the pairwise stage below then pays one unrolled dot per
-    # pair instead of three folds — identical bits (cosine_topk note).
+    # pair instead of three folds — identical bits (self-dot note).
     assigned = (
         ivf_assign(emb, seeds, id_col, vec_col)
         .withColumn("_d2", F.expr(dot_expr("embedding", "embedding")))

@@ -139,23 +139,48 @@ def test_fingerprints_twin(docs_df, docs_path):
 
 # ---------------------------------------------------------------------------
 # Embeddings: zero vector (norm 0 -> ANSI divide-by-zero without
-# try_divide) and NULL embedding (must drop everywhere, both engines).
+# try_divide) and NULL embedding (must drop everywhere, both engines);
+# the edge rows pin the cosine kernel's NULL element, width, NaN and
+# signed-zero semantics against the twins.
 # ---------------------------------------------------------------------------
+
+
+def _write_emb(tmp_path_factory, edge_rows: bool) -> str:
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.RandomState(7)
+
+    def vec():
+        return list(map(float, rng.randn(64).astype(np.float32)))
+
+    rows = [(i, vec()) for i in range(1, 9)]
+    rows.append((9, [0.0] * 64))  # zero vector: cosine undefined
+    rows.append((10, None))  # NULL embedding
+    if edge_rows:
+        rows.append((11, vec()[:32] + [None] + vec()[:31]))  # NULL element
+        rows.append((12, vec()[:63]))  # width mismatch
+        rows.append((13, vec()[:7] + [float("nan")] + vec()[:56]))  # NaN cosine
+        rows.append((14, [-0.0] + vec()[:63]))  # first product -0.0, 0.0 seed
+    # pyarrow, not pandas: from_pandas would turn the NaN into a NULL
+    p = os.path.join(str(tmp_path_factory.mktemp("degenerate_emb")), "emb.parquet")
+    ids, embs = zip(*rows)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(embs, pa.list_(pa.float64())),
+            }
+        ),
+        p,
+    )
+    return p
 
 
 @pytest.fixture(scope="module")
 def emb_path(tmp_path_factory):
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    rows = [
-        (i, list(map(float, rng.randn(64).astype(np.float32)))) for i in range(1, 9)
-    ]
-    rows.append((9, [0.0] * 64))  # zero vector: cosine undefined
-    rows.append((10, None))  # NULL embedding
-    p = os.path.join(str(tmp_path_factory.mktemp("degenerate_emb")), "emb.parquet")
-    pd.DataFrame(rows, columns=["vec_id", "embedding"]).to_parquet(p)
-    return p
+    return _write_emb(tmp_path_factory, edge_rows=True)
 
 
 @pytest.fixture(scope="module")
@@ -394,10 +419,15 @@ def test_dsir_scores_twin(spark, docs_df, docs_path):
     )
 
 
-def test_semdedup_twin(emb_df, emb_path):
+def test_semdedup_twin(spark, tmp_path_factory):
+    """On the ten rows without the cosine-kernel edge rows. Known
+    divergence (ROADMAP item 2): every row here seeds its own cell, and
+    for the 63-wide row the twin, which reads exactly EMB_DIM elements,
+    gives NULL where Spark's width-generic fold gives 1.0."""
     from logzilla_spark.operators import similarity
 
-    _assert_twin(similarity.semdedup(emb_df), od.semdedup_sql(emb_path))
+    path = _write_emb(tmp_path_factory, edge_rows=False)
+    _assert_twin(similarity.semdedup(spark.read.parquet(path)), od.semdedup_sql(path))
 
 
 def test_video_frames_twin(spark, tmp_path_factory):

@@ -7,7 +7,8 @@ and rejects plan nodes that are categorically wrong at 100 TB:
 - ``BatchEvalPython``: a row-at-a-time Python UDF stage. Banned
   outright — the engine's only Python stages are Arrow-batched
   (``ArrowEvalPython`` pandas UDFs for the parse contract,
-  ``MapInPandas`` for multimodal plumbing), which ARE the sanctioned
+  ``MapInPandas`` for multimodal plumbing, ``MapInArrow`` for the
+  blocked cosine kernel), which ARE the sanctioned
   fast path and are allowed anywhere downstream queries compose them.
 - ``CartesianProduct``: an unbroadcast cross join is a |n|x|m| shuffle;
   every intentional all-pairs op here broadcasts one side

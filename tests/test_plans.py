@@ -121,3 +121,15 @@ def test_agg_scan_prunes_columns(spark, tmp_path, pages):
     assert "message" not in read_schema
     for col in ("warc_ts", "category", "level", "lang"):
         assert col in read_schema
+
+
+@pytest.mark.parametrize("name", ["q_dedup_embedding_cosine", "q_sim_topk_bruteforce"])
+def test_exact_cosine_runs_in_the_arrow_kernel(spark, name):
+    """Exact cosine near-dup and brute-force top-k score pairs in one
+    Arrow map stage (functions/vectors.py), not a nested-loop join with
+    the cosine expression in its condition and its projection."""
+    import __spark_entry__ as entrymod
+
+    plan = plan_of(entrymod.queries()[name](spark, SF001))
+    assert "MapInArrow" in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
