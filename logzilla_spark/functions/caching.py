@@ -3,15 +3,14 @@
 Every frame an operator materializes for its own use has one owner and
 one release point, chosen by the operator's shape:
 
-- **Iterative driver loops** (the CC loop, BPE training, k-means)
+- **Iterative driver loops** (BPE training and encode, k-means)
   :func:`truncate` every round. Without truncation round k's plan
-  replays all k-1 predecessors (measured in the CC loop: 1.5s -> 48s
-  by round 5). The loop REBINDS its variable each round: CPython drops
-  the superseded frame at once and Spark's ContextCleaner frees its
-  storage (``DataFrame.unpersist()`` is a no-op on checkpointed
-  frames). A rebinding loop holds ~2 rounds of storage whatever the
-  round count; a loop that KEEPS per-round frames (the CC mapping
-  fold) holds what it keeps, by design.
+  replays all k-1 predecessors (measured in the former Spark CC loop:
+  1.5s -> 48s by round 5). The loop REBINDS its variable each round:
+  CPython drops the superseded frame at once and Spark's ContextCleaner
+  frees its storage (``DataFrame.unpersist()`` is a no-op on
+  checkpointed frames), so a loop holds ~2 rounds of storage whatever
+  the round count.
 - **Operators that run their own actions** (``build_ann_index``,
   ``update_ann_index``, ``build_neardup_index``,
   ``update_neardup_index``, ``materialize_training_run``) ``persist()``

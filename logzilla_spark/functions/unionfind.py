@@ -1,5 +1,5 @@
 """Driver-side min-label union-find: the exact reference for the
-distributed connected-components operator.
+contraction connected-components operator.
 
 Verification-only — O(edges) single-machine, used where the DuckDB
 recursive-closure twin is intractable (scripts/verify_clusters_unionfind.py)

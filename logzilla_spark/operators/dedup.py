@@ -2,9 +2,11 @@
 
 The reference stops at parse->store (SURVEY.md §2.4 — no joins, no
 aggregation), but a web-scale corpus engine needs dedup as a
-first-class stage. Five strategies. The four text ones are JVM-side
-Catalyst expressions (higher-order functions, no Python UDFs in the hot
-path — same rule as the parse stage, BASELINE.json input_hint); exact
+first-class stage. Five strategies. Exact dedup, MinHash and SimHash
+are JVM-side Catalyst expressions (higher-order functions, no Python
+UDFs in the hot path — same rule as the parse stage, BASELINE.json
+input_hint); n-gram Jaccard builds its gram sets the same way and counts
+overlaps in the blocked Arrow kernel of ``functions.overlap``; exact
 embedding cosine is the blocked Arrow kernel of ``functions.vectors``,
 whose pinned-order numpy sums give the bits of :func:`cosine_expr`:
 
@@ -13,7 +15,8 @@ whose pinned-order numpy sums give the bits of :func:`cosine_expr`:
                            banded bucket self-join -> est + exact verify
 - SimHash                : token-hash bit voting -> fingerprint ->
                            byte-block candidate join -> hamming filter
-- n-gram Jaccard         : word-3-gram inverted-index set-similarity join
+- n-gram Jaccard         : word-3-gram sets, exact overlap counts per
+                           block of documents over a gram inverted index
 - embedding cosine       : exact all-pairs baseline (the LSH scale path
                            lives in operators/similarity.py)
 
@@ -33,9 +36,9 @@ Scale notes (100 TB / 1000 executors):
 - The exact-verify stage runs only on candidates (est_sim prefilter
   first — the cheap signature check gates the expensive shingle
   intersection), the classic filter-verify funnel.
-- n-gram join: ``max_df`` drops stop-grams (document frequency cap),
-  the prefix-filtering analog that keeps the inverted index from
-  exploding on boilerplate.
+- n-gram Jaccard: ``max_df`` drops stop-grams (document frequency cap),
+  the prefix-filtering analog that keeps a gram's posting list — and
+  the partner expansion over it — from exploding on boilerplate.
 """
 
 from __future__ import annotations
@@ -45,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 from logzilla_spark.functions.caching import persist_tracked
+from logzilla_spark.functions.overlap import jaccard_pairs_above
 from logzilla_spark.functions.vectors import cosine_pairs_above
 
 from logzilla_spark.functions.hashing import (
@@ -926,17 +930,27 @@ def ngram_jaccard_pairs(
     min_jaccard: float = MIN_WORDGRAM_JACCARD,
     max_df: int | None = MAX_GRAM_DF,
 ) -> DataFrame:
-    """All-pairs word-n-gram Jaccard via inverted-index join.
+    """All-pairs word-n-gram Jaccard over a gram inverted index.
+
+    Each doc's DISTINCT grams are one Catalyst projection (the bits
+    shared with the twin and ``dup_passage_stats``); the pairs come
+    from ``functions.overlap.jaccard_pairs_above``, which collects the
+    (id, grams) rows once, counts every pair's shared grams per block
+    of documents and applies ``min_jaccard`` inside the block — no
+    candidate rows, no self-join. Size assumption: the postings fit
+    the driver (~2.6M (doc, gram) postings in the sf1 corpus).
 
     ``max_df`` drops grams appearing in more than max_df docs
-    (stop-gram guard — bounds the per-gram join fan-out, the scale
+    (stop-gram guard — bounds a gram's partner expansion, the scale
     lever for boilerplate-heavy corpora). ON by default
     (MAX_GRAM_DF): a gram shared by >max_df docs contributes a
     quadratic pair expansion, so leaving the guard opt-in made the
-    default call unsafe at scale. Union sizes still count the FULL
-    gram set per doc (sizes are taken before the guard), so surviving
-    pairs' jaccard is unchanged by the guard unless they relied on a
-    stop-gram for intersection. The DuckDB twin mirrors the guard.
+    default call unsafe at scale. The frequency counts rows, a NULL-id
+    row included (it pairs with nothing). Union sizes still count the
+    FULL gram set per doc (sizes are taken before the guard), so
+    surviving pairs' jaccard is unchanged by the guard unless they
+    relied on a stop-gram for intersection. The DuckDB twin mirrors the
+    guard.
     """
     grams = (
         _spread(df)
@@ -950,58 +964,7 @@ def ngram_jaccard_pairs(
         .withColumn("_t", F.split("_n", " "))
         .select("id", F.expr(_wordgrams_expr("_t", n)).alias("_g"))
     )
-    # carry each doc's gram-set size through the explode: union_n then
-    # falls out of the pair aggregation itself — no separate `sizes`
-    # lineage (which would recompute the tokenize+wordgram projection)
-    # and no per-side size joins after the intersect count.
-    #
-    # sz rides INSIDE the generator (arrays_zip of the size repeated
-    # against the grams), not as a sibling projection: Catalyst hoists
-    # a `size(_g)` projection ABOVE the Generate, and since `_g` is an
-    # interpreted higher-order transform it then re-evaluates the whole
-    # gram construction once per exploded gram (~|grams|x per doc —
-    # measured 5.6s vs 0.9s for this stage at sf0.1). One generator
-    # expression bounds it to a constant number of per-row evals.
-    ex = grams.select(
-        "id",
-        F.explode(
-            F.arrays_zip(F.array_repeat(F.size("_g"), F.size("_g")), F.col("_g"))
-        ).alias("z"),
-    ).select("id", F.col("z")["0"].alias("sz"), F.col("z")["_g"].alias("gram"))
-    if max_df is not None:
-        # Window-count stop-gram guard (the DuckDB twin's QUALIFY):
-        # spillable sorter bounds memory on any gram's posting list,
-        # reuses the gram lineage (a freq-count join recomputes it),
-        # and its shuffle already co-partitions the index by gram for
-        # the self-join below — no separate repartition needed.
-        w = Window.partitionBy("gram")
-        ex = (
-            ex.withColumn("_df", F.count(F.lit(1)).over(w))
-            .filter(F.col("_df") <= max_df)
-            .drop("_df")
-        )
-    else:
-        # co-partition the inverted index by gram: colocated self-join,
-        # per-gram pair expansion spread across tasks
-        ex = ex.repartition(F.col("gram"))
-    a = ex.select(F.col("id").alias("doc_a"), F.col("sz").alias("_za"), "gram")
-    b = ex.select(F.col("id").alias("doc_b"), F.col("sz").alias("_zb"), "gram")
-    return (
-        a.join(b, "gram")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("inter_n"),
-            F.first("_za").alias("_za"),
-            F.first("_zb").alias("_zb"),
-        )
-        .withColumn("union_n", F.col("_za") + F.col("_zb") - F.col("inter_n"))
-        .withColumn(
-            "jaccard", F.col("inter_n").cast("double") / F.col("union_n").cast("double")
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("doc_a", "doc_b", "inter_n", "union_n", "jaccard")
-    )
+    return jaccard_pairs_above(grams, min_jaccard, max_df)
 
 
 # --------------------------------------------------------------------------

@@ -458,7 +458,7 @@ def ivf_train_kmeans(
     broadcast, no window over the corpus, no driver-side data moves.
     Empty cells keep their previous centroid (left-join coalesce), so
     k never silently shrinks. The k-row seed frame is lineage-truncated
-    every iteration (the CC-loop discipline): ``seeds`` has two
+    every iteration (functions/caching.py's loop policy): ``seeds`` has two
     consumers per round (the assignment and the empty-cell fallback),
     so an untruncated loop would DOUBLE the lazy plan each iteration —
     2^n_iters clones of the corpus scan by the time a consumer runs.
@@ -933,7 +933,8 @@ def pq_train_kmeans(
     row per (vector, sub) crosses the shuffle), then a
     (sub, code, pos) mean over the exploded subvectors — uniform keys,
     two-phase with map-side partials. The codebook frame is
-    lineage-truncated every iteration (the CC-loop discipline).
+    lineage-truncated every iteration (functions/caching.py's loop
+    policy).
     """
     cb = pq_codebooks_seeded(emb, m, ksub, dim, id_col, vec_col)
     sv = persist_tracked(

@@ -1225,16 +1225,16 @@ def bpe_train(
     sequential algorithm. Job count: O(n_merges / batch_size) rounds,
     two jobs per round (candidate collect + checkpointed rewrite).
 
-    No DuckDB twin: the merge loop is iterative argmax-and-rewrite
-    (the neardup_clusters class) — correctness is pinned by a
-    differential test against a pure-Python reference trainer
-    (tests/test_dataops.py), the streaming-dedup verification pattern.
+    No DuckDB twin: the merge loop is iterative argmax-and-rewrite —
+    correctness is pinned by a differential test against a pure-Python
+    reference trainer (tests/test_dataops.py), the streaming-dedup
+    verification pattern.
 
     Scale shape: the corpus is touched ONCE (the explode+count word
     shuffle inherited from bpe_pair_counts); every round runs on the
     DISTINCT-word vocab only — millions of rows at 100 TB, not
-    trillions — with one O(batch)-row collect per round (the same
-    driver-coordination footprint as the CC loop's convergence check).
+    trillions — with one O(batch)-row collect per round, so the driver
+    coordinates the loop and never holds the vocab.
     Merge application is greedy left-to-right non-overlapping via ONE
     array fold per round whose lambda dispatches on the batch's pair
     set (a when-chain, not nested per-merge folds — one pass over each
@@ -1242,9 +1242,9 @@ def bpe_train(
     round because merged symbols are strictly longer than any lhs and
     disjoint from every pick's symbols. Per-round lineage is truncated
     (functions/caching.py: reliable checkpoint() when the deployment
-    sets ``spark.checkpoint.dir``, localCheckpoint otherwise — the
-    neardup_clusters trade) and the loop REBINDS ``vocab`` each round,
-    so superseded rounds are dereferenced immediately and the run holds
+    sets ``spark.checkpoint.dir``, localCheckpoint otherwise: speed
+    against executor-loss recovery) and the loop REBINDS ``vocab`` each
+    round, so superseded rounds are dereferenced immediately and the run holds
     ~2 vocab snapshots regardless of n_merges (reliable checkpoint
     files are deleted by the cleaner — session.py enables
     cleanCheckpoints).

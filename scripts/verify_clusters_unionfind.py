@@ -4,9 +4,9 @@ graph's mega-components make the closure O(sum |C|^2) rows).
 
 The pair set itself is DuckDB-hash-verified independently
 (q_dedup_minhash_pairs), so this checks the CLUSTERING step exactly:
-Spark's distributed contraction CC vs a driver-side union-find over
-the same collected edge list. Collect is fine here — this is a
-verification harness, not the operator.
+the operator's contraction CC (hook, pointer jump, contract) vs a
+driver-side union-find over the same collected edge list — two
+independent algorithms over the same pairs.
 
 Usage: SPARK_GRAFT_VERIFY_SF=/root/testdata/sf0.1 python scripts/verify_clusters_unionfind.py
 """

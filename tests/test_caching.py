@@ -15,60 +15,67 @@ import subprocess
 import sys
 import textwrap
 
-from .conftest import SF01
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# builds near-dup clusters in a session whose deployment sets
-# spark.checkpoint.dir, reports the checkpoint part-files, then drops
-# every cached block and re-reads the clusters from the checkpoints
+# trains a BPE merge table in a session whose deployment sets
+# spark.checkpoint.dir, dropping every cached block right after each
+# round's truncate, so every round reads the previous one from its
+# checkpoint files; reports the part-files and the merge table against
+# the pure-Python reference trainer
 RELIABLE_PROBE = textwrap.dedent(
     """
     import json, os, sys
 
-    from logzilla_spark.functions.unionfind import union_find_min_label
-    from logzilla_spark.operators import cluster, dedup
+    from logzilla_spark.operators import textstats
     from logzilla_spark.session import get_spark
+    from tests.test_dataops import _py_bpe_train
 
-    ckpt, sf_dir = sys.argv[1], sys.argv[2]
+    ckpt = sys.argv[1]
     spark = get_spark(cores=2, shuffle_partitions=4, app_name="reliable_truncate",
                       extra_conf={"spark.checkpoint.dir": ckpt})
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = dedup.minhash_lsh_pairs(docs)
-    edges = [(r.doc_a, r.doc_b) for r in pairs.collect()]
-    clusters = cluster.neardup_clusters(docs, pairs)
-    parts = [f for _, _, fs in os.walk(ckpt) for f in fs if f.startswith("part-")]
-    print(json.dumps({"part_files": len(parts)}), flush=True)
+    truncate = textstats.truncate
 
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for k in jmap.keySet().toArray():
-        jmap.get(k).unpersist(True)
-    got = {r.id: r.cluster_id for r in clusters.collect()}
-    uf = union_find_min_label(edges)
-    want = {r.doc_id: uf.get(r.doc_id, r.doc_id) for r in docs.select("doc_id").collect()}
-    print(json.dumps({"clustered": sum(i != c for i, c in got.items()),
-                      "match": got == want}))
+    def truncate_then_drop(df):
+        out = truncate(df)
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        for k in jmap.keySet().toArray():
+            jmap.get(k).unpersist(True)
+        return out
+
+    textstats.truncate = truncate_then_drop
+    texts = ["low lower lowest low low", "newer newest new news low",
+             "wider wide widest wider", None, "low lower newer wider"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = [(r.step, r.lhs, r.rhs, r.freq)
+           for r in textstats.bpe_train(df, n_merges=6).collect()]
+    parts = [f for _, _, fs in os.walk(ckpt) for f in fs if f.startswith("part-")]
+    left = spark.sparkContext._jsc.getPersistentRDDs().size()
+    print(json.dumps({"part_files": len(parts), "left": left, "merges": len(got),
+                      "match": got == _py_bpe_train(texts, 6)}))
     spark.stop()
     """
 )
 
 
 def test_reliable_truncate_when_deployment_sets_checkpoint_dir(tmp_path):
-    """With ``spark.checkpoint.dir`` set, the CC rounds land in that
-    store, and the clusters survive the loss of every cached block:
-    they equal driver-side union-find over the same pairs."""
+    """With ``spark.checkpoint.dir`` set, BPE training's per-round
+    truncates land in that store, and training survives the loss of
+    every cached block after each round (a local-checkpoint session
+    loses its rounds' blocks and fails): the merge table equals the
+    pure-Python reference trainer's."""
     ckpt = tmp_path / "ckpt"
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
     out = subprocess.run(
-        [sys.executable, "-c", RELIABLE_PROBE, str(ckpt), SF01],
+        [sys.executable, "-c", RELIABLE_PROBE, str(ckpt)],
         capture_output=True, text=True, cwd=REPO, env=env, timeout=600,
     )
     lines = [json.loads(l) for l in out.stdout.splitlines() if l.startswith("{")]
-    assert lines and lines[0]["part_files"] > 0, (
-        f"no checkpoint files under {ckpt}: {out.stdout}\n{out.stderr[-3000:]}"
-    )
-    assert out.returncode == 0, out.stderr[-3000:]
-    assert lines[-1]["clustered"] > 0 and lines[-1]["match"], lines
+    assert out.returncode == 0 and lines, out.stderr[-3000:]
+    got = lines[-1]
+    assert got["part_files"] > 0, f"no checkpoint files under {ckpt}: {got}"
+    assert got["left"] == 0, got
+    assert got["merges"] >= 4 and got["match"], got
 
 
 def test_truncate_default_mode_is_disk_backed(spark):

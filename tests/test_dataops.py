@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 from logzilla_spark.functions.hashing import P31, md5_long, minhash_coeffs
 from logzilla_spark.operators import dedup, multimodal, similarity, textstats
 
+from .conftest import SF01
+
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
     "from the warm windowsill and the rain falls softly on the roof"
@@ -186,6 +188,41 @@ def test_ngram_stop_gram_guard_boilerplate_corpus(spark):
         for r in dedup.ngram_jaccard_pairs(df, max_df=None).collect()
     }
     assert any(a <= 8 and b <= 8 for a, b in unguarded)
+
+
+def test_ngram_jaccard_block_boundaries(spark, monkeypatch):
+    """Blocks of a few documents give the rows of one whole block."""
+    from logzilla_spark.functions import overlap
+
+    docs = spark.read.parquet(f"{SF01}/documents.parquet")
+    whole = sorted(dedup.ngram_jaccard_pairs(docs).collect())
+    monkeypatch.setattr(overlap, "HIT_BLOCK", 4)
+    assert sorted(dedup.ngram_jaccard_pairs(docs).collect()) == whole
+    assert whole
+
+
+def test_ngram_jaccard_null_id_counts_toward_guard(spark, tmp_path):
+    """The stop-gram guard counts rows: a NULL-id row holding the gram
+    pushes its frequency over ``max_df`` (and pairs with nothing), so
+    the two id'd copies no longer pair — as in the DuckDB twin."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from logzilla_spark import oracle_dataops as od
+
+    path = str(tmp_path / "docs.parquet")
+    pq.write_table(pa.table({
+        "doc_id": pa.array([1, 2, None], pa.int64()),
+        "text": ["a b c"] * 3,
+    }), path)
+    df = spark.read.parquet(path)
+    got = dedup.ngram_jaccard_pairs(df, max_df=2).collect()
+    assert got == []
+    assert duckdb.sql(od.ngram_jaccard_pairs_sql(path, max_df=2)).fetchall() == []
+    # the guard is what drops the pair: one more allowed row keeps it
+    kept = dedup.ngram_jaccard_pairs(df, max_df=3).collect()
+    assert [(r.doc_a, r.doc_b) for r in kept] == [(1, 2)]
 
 
 def _emb(spark):
@@ -484,17 +521,42 @@ def test_connected_components_planted(spark):
     assert sum(1 for _, (c, k) in full.items() if k) == 4  # 1, 10, 20, 99
 
 
-def test_connected_components_max_iter_raises(spark):
+def test_connected_components_null_selfloop_duplicate_edges(spark):
+    """A NULL endpoint is no node (its edge drops, the other end stays a
+    node), a self-loop is a one-node component, duplicate and reversed
+    edges collapse; docs in no edge and a NULL-id doc pass through
+    neardup_clusters as the round-loop operator emitted them."""
     from logzilla_spark.operators import cluster
 
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 8)], "doc_a long, doc_b long"
+        [(1, None), (None, 2), (3, 3), (5, 4), (4, 5), (4, 5), (7, 6)],
+        "doc_a long, doc_b long",
     )
-    try:
-        cluster.connected_components(pairs, max_iter=2)
-        raise AssertionError("expected RuntimeError on non-convergence")
-    except RuntimeError as e:
-        assert "did not converge" in str(e)
+    got = {r.id: r.cluster_id for r in cluster.connected_components(pairs).collect()}
+    assert got == {1: 1, 2: 2, 3: 3, 4: 4, 5: 4, 6: 6, 7: 6}
+    docs = spark.createDataFrame([(i,) for i in [*range(1, 9), None]], "doc_id long")
+    full = {r.id: (r.cluster_id, r.is_canonical)
+            for r in cluster.neardup_clusters(docs, pairs).collect()}
+    want = {i: (i, True) for i in (1, 2, 3, 4, 6, 8)}
+    want.update({5: (4, False), 7: (6, False), None: (None, None)})
+    assert full == want
+
+
+def test_connected_components_long_permuted_chain(spark):
+    """A 20k-node chain under a random id permutation (diameter 20k):
+    hooking alone would take a round per hop; the pointer jumps must
+    still reach union-find's labels."""
+    import random
+
+    from logzilla_spark.functions.unionfind import union_find_min_label
+    from logzilla_spark.operators import cluster
+
+    ids = random.Random(7).sample(range(10**9), 20_000)
+    edges = [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    got = {r.id: r.cluster_id for r in cluster.connected_components(pairs).collect()}
+    assert got == union_find_min_label(edges)
+    assert set(got.values()) == {min(ids)}
 
 
 def test_chunk_sequences_hand_rows(spark):

@@ -8,7 +8,7 @@ and rejects plan nodes that are categorically wrong at 100 TB:
   outright — the engine's only Python stages are Arrow-batched
   (``ArrowEvalPython`` pandas UDFs for the parse contract,
   ``MapInPandas`` for multimodal plumbing, ``MapInArrow`` for the
-  blocked cosine kernel), which ARE the sanctioned
+  blocked cosine and set-overlap kernels), which ARE the sanctioned
   fast path and are allowed anywhere downstream queries compose them.
 - ``CartesianProduct``: an unbroadcast cross join is a |n|x|m| shuffle;
   every intentional all-pairs op here broadcasts one side

@@ -369,9 +369,9 @@ from logzilla_spark.functions.unionfind import union_find_min_label as _union_fi
 @given(edges=st.lists(edge_st, min_size=1, max_size=40))
 def test_connected_components_matches_union_find(edges, spark):
     """Random graphs (duplicate edges, both orientations, self-free):
-    the distributed CC fixpoint must equal union-find's min-id labels.
-    Small id range forces dense multi-component collisions; duplicate
-    and reversed edges exercise the no-distinct mirror path."""
+    the CC fixpoint must equal union-find's min-id labels. Small id
+    range forces dense multi-component collisions; duplicate and
+    reversed edges exercise the contraction's dedup."""
     from logzilla_spark.operators import cluster
 
     want = _union_find(edges)

@@ -32,10 +32,11 @@ def test_repeated_curate_pass_compiles_nothing(spark):
     repeated query whose generated code repeats compiles nothing.
 
     ``q_dedup_clusters`` runs in each pass (its classes fill the cache)
-    but is not held to zero: its connected-components rounds generate
-    code that depends on runtime state (AQE's stage numbering, whether a
-    round's broadcast keys are unique), so a repeat may meet a variant it
-    has not compiled yet.
+    but is not held to zero: ``minhash_lsh_pairs`` persists its feature
+    table (functions/caching.py), so the first pass computes it while
+    the second reads it back through an in-memory table scan, a plan
+    with its own generated classes (4 at sf0.01; 0 when the pass
+    releases the operator caches first, and 0 on a third pass).
     """
     import __spark_entry__
 

@@ -126,8 +126,9 @@ def test_materialize_releases_its_examples_cache(spark, docs, tmp_path):
     itself, so it persists them and releases them before returning
     (the functions/caching.py policy for self-acting operators). The
     lazy stages it composes (keep-best's scored frame, the curated
-    frame) still register theirs — lazy-plan policy; they sit below the
-    CC loop's checkpoint, so every call registers fresh ones — but no
+    frame) still register theirs — lazy-plan policy; they sit above the
+    clusters' createDataFrame, a new plan per call, so every call
+    registers fresh ones — but no
     registered frame may be the examples table."""
     from logzilla_spark.functions import caching
 
