@@ -3,7 +3,7 @@
 Every frame an operator materializes for its own use has one owner and
 one release point, chosen by the operator's shape:
 
-- **Iterative driver loops** (BPE training and encode, k-means)
+- **Iterative driver loops** (BPE training and encode)
   :func:`truncate` every round. Without truncation round k's plan
   replays all k-1 predecessors (measured in the former Spark CC loop:
   1.5s -> 48s by round 5). The loop REBINDS its variable each round:

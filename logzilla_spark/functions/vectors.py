@@ -1,4 +1,4 @@
-"""Pinned-order cosine as one blocked Arrow kernel.
+"""Pinned-order cosine and L2 as blocked Arrow kernels.
 
 Exact cosine near-dup (``dedup.embedding_neardup_pairs``) and brute-force
 top-k (``similarity.cosine_topk``) score blocks of rows against a whole
@@ -25,6 +25,11 @@ NULLs, as in the fold: a NULL array, a NULL element or a width mismatch
 makes the cosine NULL. Vectors are grouped by width and a pair is only
 computed inside one group. A NULL id never pairs (``<`` and ``!=`` on
 NULL are NULL).
+
+Nearest centroid (:func:`nearest_centroids`): IVF cell assignment and
+probing, PQ encoding and both k-means loops (:func:`lloyd`) score row
+blocks against a small driver-held centroid matrix with the same
+groups and column loops (squared L2 as ``acc + (a - b) * (a - b)``).
 """
 
 from __future__ import annotations
@@ -35,7 +40,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
 
 # Most pairs one block scores: a float64 block is 256 KiB, so the
 # accumulator and its product temporary stay cache-resident, and an
@@ -248,3 +253,195 @@ def cosine_topk_partial(stream: DataFrame, probes: DataFrame, k: int) -> DataFra
         return _scored(blocks(), tiles, score, schema.fieldNames(), block)
 
     return stream.mapInArrow(kernel, schema)
+
+
+# Fixed-point k-means means (:func:`lloyd`): components quantize to
+# floor(v * 2^24) BIGINTs, so a mean is a pure function of exact,
+# order-independent integer sums — bit-portable to the DuckDB twin.
+IVF_FP_BITS = 24
+_FP_ONE = float(1 << IVF_FP_BITS)
+
+
+def _l2sq(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Squared L2 of every (a row, b row) pair as :func:`_cosine`: the
+    ``similarity.l2sq_expr`` fold ``acc + (a - b) * (a - b)`` from 0.0."""
+    acc = np.zeros((a.shape[1], b.shape[1]))
+    with np.errstate(all="ignore"):
+        for ai, bi in zip(a, b):
+            d = ai[:, None] - bi[None, :]
+            acc += d * d
+    return acc
+
+
+def _ranked(vecs: pa.Array, groups: dict, k: int, cosine: bool) -> tuple:
+    """(order, score, null) of every row against ``k`` centroids
+    (``groups``), ``order`` best first: cosine descending with NaN first
+    (Spark's NaN is the largest double), L2 ascending with NaN after
+    every number; NULL last; ties to the lower position (label)."""
+    score = np.zeros((len(vecs), k))
+    null = np.ones(score.shape, dtype=bool)
+    for w, (pos, cols, dots) in _groups(vecs).items():
+        if w in groups:
+            cpos, ccols, cdots = groups[w]
+            ix = np.ix_(pos, cpos)
+            if cosine:
+                score[ix], null[ix] = _cosine(cols, dots, ccols, cdots)
+            else:
+                score[ix], null[ix] = _l2sq(cols, ccols), False
+    nan = np.isnan(score)
+    cls = np.where(null, 2, np.where(nan, int(not cosine), int(cosine)))
+    key = np.where(null | nan, 0.0, -score if cosine else score)
+    order = np.lexsort((np.broadcast_to(np.arange(k), score.shape), key, cls))
+    return order, score, null
+
+
+def _books(centroids: DataFrame, dsub: int | None) -> dict[int, tuple]:
+    """The collected (label, centroid) frame, or (sub, label, centroid)
+    with ``dsub``: per sub, (labels ascending, float64 centroids)."""
+    t = centroids.toArrow()
+    t = t.sort_by([(c, "ascending") for c in t.column_names[:-1]])
+    subs = np.zeros(t.num_rows, int) if dsub is None else t.column(0).to_numpy()
+    labels = t.columns[-2].to_numpy()
+    cents = t.columns[-1].combine_chunks().cast(pa.list_(pa.float64()))
+    return {int(s): (labels[subs == s], cents.filter(pa.array(subs == s))) for s in np.unique(subs)}
+
+
+def nearest_centroids(vecs: DataFrame, books: dict, dsub: int | None, emit, schema) -> DataFrame:
+    """The one nearest-centroid pass: ``mapInArrow`` over row blocks of
+    the (id, vector) frame against driver-held :func:`_books`. ``dsub``
+    None ranks whole vectors by cosine (IVF); else sub ``s`` ranks the
+    clipped slice ``[s * dsub, (s + 1) * dsub)`` by squared L2 (PQ). A
+    block holds at most :data:`PAIR_BLOCK` scores per sub. ``emit`` maps
+    (block, {sub: (slice, *_ranked)}) pairs to batches of ``schema``."""
+    if not books:
+        return vecs.sparkSession.createDataFrame([], schema)
+    groups = {s: (len(labels), _groups(cents)) for s, (labels, cents) in books.items()}
+    step = max(1, PAIR_BLOCK // max(k for k, _ in groups.values()))
+
+    def scored(batches: Iterator[pa.RecordBatch]):
+        for batch in batches:
+            for r in range(0, batch.num_rows, step):
+                block, ranked = batch.slice(r, step), {}
+                for s, (k, g) in groups.items():
+                    sv = block.column(1)
+                    if dsub is not None:
+                        sv = pc.list_slice(sv, s * dsub, (s + 1) * dsub)
+                    ranked[s] = (sv, *_ranked(sv, g, k, dsub is None))
+                yield block, ranked
+
+    return vecs.mapInArrow(lambda batches: emit(scored(batches)), schema)
+
+
+def nearest_cells(vecs: DataFrame, centroids: DataFrame, n: int) -> DataFrame:
+    """(id, vector, label, cosine): each row of the (id, vector) frame
+    once per each of its ``n`` best (label, centroid) rows by cosine.
+    Column names are the two frames'."""
+    books = _books(centroids, None)
+    cosine = StructField("cosine", DoubleType(), True)
+    schema = StructType(vecs.schema.fields[:2] + [centroids.schema.fields[0], cosine])
+
+    def emit(blocks):
+        for block, ranked in blocks:
+            _, order, cos, null = ranked[0]
+            at = order[:, :n].ravel()
+            rows = np.repeat(np.arange(block.num_rows), min(n, order.shape[1]))
+            yield pa.RecordBatch.from_arrays(
+                [block.column(0).take(rows), block.column(1).take(rows),
+                 pa.array(books[0][0][at]),
+                 pa.array(cos[rows, at], pa.float64(), mask=null[rows, at])],
+                names=schema.fieldNames(),
+            )
+
+    return nearest_centroids(vecs, books, None, emit, schema)
+
+
+def nearest_codes(vecs: DataFrame, codebooks: DataFrame, dsub: int) -> DataFrame:
+    """(id, codes): per sub of the (sub, code, codeword) frame, in sub
+    order, the code of the L2-nearest codeword to the row's slice."""
+    books = _books(codebooks, dsub)
+    schema = StructType([vecs.schema.fields[0], StructField("codes", ArrayType(IntegerType()))])
+
+    def emit(blocks):
+        for block, ranked in blocks:
+            codes = np.stack([books[s][0][r[1][:, 0]] for s, r in ranked.items()], 1).astype(np.int32)
+            offsets = np.arange(0, codes.size + 1, codes.shape[1], dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [block.column(0), pa.ListArray.from_arrays(offsets, codes.ravel())],
+                names=schema.fieldNames(),
+            )
+
+    return nearest_centroids(vecs, books, dsub, emit, schema)
+
+
+_SUMS = ("key", "sum", "n", "nn")
+
+
+def _reduce(keys: np.ndarray, vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Partials added per distinct key, exactly (int64)."""
+    keys, inv = np.unique(keys, return_inverse=True)
+    out = np.zeros((len(keys), vals.shape[1]), np.int64)
+    np.add.at(out, inv, vals)
+    return keys, out
+
+
+def _fixed(flat: pa.Array) -> np.ndarray:
+    """``floor(v * 2^IVF_FP_BITS)`` as Spark's BIGINT floor (NaN to 0,
+    saturating at the int64 range); a NULL element reads 0."""
+    q = np.floor(flat.fill_null(0).to_numpy(zero_copy_only=False) * _FP_ONE)
+    fixed = np.clip(np.nan_to_num(q, nan=0.0), -(2.0**63), 2.0**63 - 1024).astype(np.int64)
+    fixed[q >= 2.0**63] = np.iinfo(np.int64).max
+    return fixed
+
+
+def _sums(blocks) -> Iterator[pa.RecordBatch]:
+    """A task's Lloyd partials per key ``sub << 48 | centroid << 24 |
+    element``: the sum of :func:`_fixed` values, the element count ``n``
+    and the non-NULL count ``nn``. A NULL vector adds nothing."""
+    keys, vals = np.zeros(0, np.int64), np.zeros((0, 3), np.int64)
+    for _, ranked in blocks:
+        for s, (sv, order, _, _) in ranked.items():
+            lens = pc.list_value_length(sv).fill_null(0).to_numpy()
+            flat = pc.list_flatten(sv)
+            rows = np.repeat(np.arange(len(lens)), lens)
+            pos = np.arange(len(rows)) - np.repeat(np.cumsum(lens) - lens, lens)
+            valid = ~flat.is_null().to_numpy(zero_copy_only=False)
+            keys = np.concatenate([keys, (s << 48) | (order[rows, 0] << 24) | pos])
+            vals = np.concatenate([vals, np.stack([_fixed(flat), np.ones(len(rows), np.int64), valid], 1)])
+        keys, vals = _reduce(keys, vals)
+    if len(keys):
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(keys)] + [pa.array(v) for v in vals.T], names=_SUMS
+        )
+
+
+def _means(books: dict[int, tuple], keys: np.ndarray, vals: np.ndarray) -> dict:
+    """Each centroid with members replaced by their mean
+    ``floor(sum / n) / 2^IVF_FP_BITS`` per element, NULL where every
+    member's element is NULL, as wide as the widest member; a centroid
+    without members keeps its value."""
+    with np.errstate(all="ignore"):
+        mean = np.floor(vals[:, 0].astype(np.float64) / vals[:, 1]) / _FP_ONE
+    new = {s: cents.to_pylist() for s, (_, cents) in books.items()}
+    for c in np.unique(keys >> 24):  # each (sub, centroid) with members
+        at = keys >> 24 == c  # its elements, positions ascending
+        new[c >> 24][c & 0xFFFFFF] = [float(v) if nn else None for v, nn in zip(mean[at], vals[at, 2])]
+    return {s: (labels, pa.array(new[s], pa.list_(pa.float64()))) for s, (labels, _) in books.items()}
+
+
+def lloyd(vecs: DataFrame, centroids: DataFrame, n_iters: int, dsub: int | None = None):
+    """Fixed-point Lloyd k-means from the init ``centroids``: (label,
+    centroid) cells by cosine, or (sub, label, centroid) codewords by L2
+    with ``dsub``. The centroids stay on the driver; each iteration is
+    one :func:`nearest_centroids` pass returning :func:`_sums`, added
+    exactly into :func:`_means`. Returns a local frame of the init's
+    columns with float64 centroids."""
+    books, schema = _books(centroids, dsub), ", ".join(c + " long" for c in _SUMS)
+    for _ in range(int(n_iters)):
+        t = nearest_centroids(vecs, books, dsub, _sums, schema).toArrow()
+        cols = [t.column(c).to_numpy() for c in _SUMS]
+        books = _means(books, *_reduce(cols[0], np.stack(cols[1:], 1)))
+    names = centroids.columns
+    rows = [(s, int(label), c)[-len(names):] for s, (labels, cents) in books.items()
+            for label, c in zip(labels, cents.to_pylist())]
+    types = ("int", "int", "array<double>")[-len(names):]
+    return vecs.sparkSession.createDataFrame(rows, ", ".join(map(" ".join, zip(names, types))))

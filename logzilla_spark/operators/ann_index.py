@@ -94,13 +94,12 @@ def build_ann_index(
     Scale shape: the vector frame is persisted once and feeds both the
     cell assignment and the PQ encoding (one corpus materialization,
     not one per artifact; with ``trained=True`` the k-means loops read
-    the same persisted frame). Each artifact write is the operators'
-    own bounded plan — one row per vector through every shuffle, no
-    corpus broadcast — plus a partitionBy(cell) parquet write whose
-    fan-out is bounded by n_cells. Returns the index descriptor
-    (params + committed snapshot ids).
+    the same persisted frame and return local relations). Each
+    artifact write is one nearest-centroid pass, no corpus broadcast,
+    plus a partitionBy(cell) parquet write whose fan-out is bounded by
+    n_cells. Returns the index descriptor (params + committed snapshot
+    ids).
     """
-    seeds = codebooks = None
     vecs = emb.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -111,12 +110,6 @@ def build_ann_index(
         else:
             seeds = ivf_seeds(vecs, n_cells)
             codebooks = pq_codebooks_seeded(vecs, m, ksub, dim)
-        # the k-row / (m x ksub)-row artifacts are consumed twice below
-        # (their own write + the codes build) — cheap either way, but
-        # recomputing a TRAINED quantizer would re-run the k-means
-        # loops, so pin both for the build
-        seeds = seeds.persist(StorageLevel.MEMORY_AND_DISK)
-        codebooks = codebooks.persist(StorageLevel.MEMORY_AND_DISK)
         assigned = ivf_assign(vecs, seeds).select(
             F.col("id").alias("vec_id"), "cell"
         )
@@ -138,11 +131,9 @@ def build_ann_index(
         }
     finally:
         # the build runs its own actions: every consumer of the cached
-        # frames ran inside the overwrite jobs above, so it owns and
+        # frame ran inside the overwrite jobs above, so it owns and
         # releases them here (functions/caching.py)
-        for frame in (vecs, seeds, codebooks):
-            if frame is not None:
-                frame.unpersist()
+        vecs.unpersist()
     return {
         "name": name,
         "m": m,
@@ -270,7 +261,10 @@ def ann_serve_topk(
             f"cells {cells} — index out of sync with centroids"
         )
     luts = pq_probe_luts(probes, codebooks, m, dim, id_col, vec_col)
-    probe_side = probe_cells.select("probe_id", "cell").join(luts, "probe_id")
+    # broadcast: the nearest-centroid pass leaves probe_cells unpartitioned
+    probe_side = F.broadcast(probe_cells.select("probe_id", "cell")).join(
+        luts, "probe_id"
+    )
     pairs = (
         codes.select(F.col("vec_id").alias("neighbor_id"), "codes", "cell")
         .join(F.broadcast(probe_side), "cell")

@@ -14,7 +14,8 @@ Approximate-nearest-neighbor over ``array<float>`` embeddings:
 All cosine math is the sequential fold of ``operators.dedup.cosine_expr``
 so the DuckDB oracle reproduces the exact double bits (no float-ordering
 drift — see that docstring). Brute force runs it in the blocked Arrow
-kernel of ``functions.vectors`` (pinned-order numpy sums, same bits);
+kernel of ``functions.vectors`` (pinned-order numpy sums, same bits),
+as do IVF assignment, PQ encoding and k-means training;
 the candidate-pair paths (LSH, IVF, SemDeDup, PQ) use ``dot_expr``.
 Self-dot note: those paths compute each side's norm term once per row,
 not once per pair; the expression tree is identical, so the bits are
@@ -33,15 +34,17 @@ Scale notes (100 TB / 1000 executors):
   candidate lists are bounded; raise ``n_planes`` as the corpus grows
   (buckets ~ corpus/2^planes).
 - Top-k per probe is a window over candidates only, never the corpus.
+- IVF/PQ quantizers are collected to the driver; assignment and
+  encoding stream the corpus, and each k-means iteration is one pass.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from logzilla_spark.functions.caching import persist_tracked, truncate
+from logzilla_spark.functions.caching import persist_tracked
 from logzilla_spark.functions.hashing import hyperplanes
-from logzilla_spark.functions.vectors import cosine_topk_partial
+from logzilla_spark.functions.vectors import cosine_topk_partial, lloyd, nearest_cells, nearest_codes
 from logzilla_spark.operators.dedup import COSINE_THRESHOLD, cosine_expr, dot_expr
 
 N_PLANES = 8
@@ -228,44 +231,6 @@ def embedding_neardup_lsh(
 IVF_CELLS = 16
 IVF_NPROBE = 2
 
-# fixed-point scale for k-means centroid means (ivf_train_kmeans /
-# pq_train_kmeans): components quantize to floor(v * 2^24) BIGINTs so
-# the mean is a pure function of exact integers — order-independent,
-# hence bit-portable to the DuckDB twin (see ivf_train_kmeans)
-IVF_FP_BITS = 24
-_FP_ONE = float(1 << IVF_FP_BITS)
-
-
-def _fp_quantize(v_col: str):
-    """floor(v * 2^IVF_FP_BITS) as BIGINT — both steps exact (the
-    multiply is an exponent shift on a float-to-double-widened value,
-    floor has no half-rounding ambiguity), so the integer is identical
-    in Spark and DuckDB for the same input bits."""
-    return F.expr(f"cast(floor({v_col} * {_FP_ONE!r}) as bigint)")
-
-
-def _fp_mean(fv_col: str):
-    """Quantized mean of fixed-point components: floor(sum/n) back at
-    float scale. sum is an exact BIGINT (order-independent); the one
-    double division and floor are IEEE-deterministic; the final
-    division by 2^IVF_FP_BITS is an exact exponent shift."""
-    n = F.count(F.lit(1))
-    return (
-        F.floor(F.sum(fv_col).cast("double") / n).cast("double")
-        / F.lit(_FP_ONE)
-    )
-
-
-# Rejected this round (measured): fusing the posexplode -> per-pos
-# mean -> regroup pipeline into ONE per-group aggregation with
-# 2 x dim statically-widened sum/count aggregates. Bit-identical, one
-# less shuffle per Lloyd iteration — but a 129-aggregate
-# HashAggregate loses codegen efficiency and measured SLOWER at sf1.0
-# (IVF train 6.9s -> 9.7s steady-state, 32 cores). The exploded form
-# stays; its per-iteration shuffles carry only k x dim key rows after
-# map-side partials.
-
-
 def ivf_seeds(
     emb: DataFrame,
     n_cells: int = IVF_CELLS,
@@ -299,40 +264,14 @@ def ivf_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, embedding, cell): each vector joins its nearest seed by
-    cosine (ties -> lowest cell). The k-row seed table is broadcast, so
-    the k candidate rows per vector are co-located and the max_by
-    partial aggregation completes map-side: the only shuffle carries
-    ONE row per vector. No corpus-sized broadcast, no window over the
-    corpus."""
-    # Vector self-dot hoisted out of the k-candidate loop; seed
-    # self-dots computed once per seed row (identical bits — the
-    # self-dot note).
-    a = (
-        emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("embedding"))
-        .withColumn("_ed2", F.expr(dot_expr("embedding", "embedding")))
-        .crossJoin(
-            F.broadcast(
-                seeds.withColumn("_sd2", F.expr(dot_expr("seed", "seed")))
-            )
-        )
-        .withColumn(
-            "_cos",
-            F.expr(
-                f"try_divide({dot_expr('embedding', 'seed')}, sqrt(_ed2 * _sd2))"
-            ),
-        )
-    )
-    picked = a.groupBy("id").agg(
-        F.max_by(
-            F.struct("cell", "embedding"),
-            F.struct(F.col("_cos"), (-F.col("cell")).alias("_nc")),
-        ).alias("_k")
-    )
-    return picked.select(
-        "id",
-        F.col("_k.embedding").alias("embedding"),
-        F.col("_k.cell").alias("cell"),
+    """(id, embedding, cell, centroid_cos): each vector with its nearest
+    seed by cosine (NaN first, NULL last, ties -> lowest cell) and that
+    cosine. The k-row seed table is collected to the driver and the
+    corpus streams through ``functions.vectors.nearest_cells`` — no
+    shuffle, one output row per input row."""
+    vecs = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("embedding"))
+    return nearest_cells(vecs, seeds.select("cell", "seed"), 1).withColumnRenamed(
+        "cosine", "centroid_cos"
     )
 
 
@@ -344,32 +283,12 @@ def probe_nearest_cells(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(probe_id, _pe, cell): each probe's ``nprobe`` nearest cells by
-    centroid cosine (ties -> lowest cell). The k-row centroid table is
-    broadcast; the row_number window partitions by probe, so it runs
-    over the (tiny) probe side only — shared by every IVF-family
-    query path and the persisted-index server (operators.ann_index)."""
-    # Probe self-dot hoisted out of the k-candidate loop (identical
-    # bits — the self-dot note).
-    pc = (
-        probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("_pe"))
-        .withColumn("_pd2", F.expr(dot_expr("_pe", "_pe")))
-        .crossJoin(
-            F.broadcast(
-                seeds.withColumn("_sd2", F.expr(dot_expr("seed", "seed")))
-            )
-        )
-        .withColumn(
-            "_cos",
-            F.expr(f"try_divide({dot_expr('_pe', 'seed')}, sqrt(_pd2 * _sd2))"),
-        )
-    )
-    wp = Window.partitionBy("probe_id").orderBy(
-        F.col("_cos").desc(), F.col("cell").asc()
-    )
-    return (
-        pc.withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= int(nprobe))
-        .select("probe_id", "_pe", "cell")
+    centroid cosine, in :func:`ivf_assign`'s order — shared by every
+    IVF-family query path and the persisted-index server
+    (operators.ann_index)."""
+    p = probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("_pe"))
+    return nearest_cells(p, seeds.select("cell", "seed"), int(nprobe)).select(
+        "probe_id", "_pe", "cell"
     )
 
 
@@ -385,8 +304,8 @@ def cosine_topk_ivf(
     """Approximate top-k via IVF: exact cosine only against corpus
     vectors living in each probe's ``nprobe`` nearest cells.
 
-    The corpus is assigned to cells once (one row-per-vector shuffle,
-    uniform-ish by seed geometry) and joined on cell id against the
+    The corpus is assigned to cells once (one nearest-centroid pass,
+    no shuffle) and joined on cell id against the
     broadcast probe->cells set. A corpus vector lives in exactly ONE
     cell and a probe's nprobe cells are distinct, so candidate pairs
     are already unique — no distinct needed (unlike the LSH multiprobe
@@ -434,63 +353,20 @@ def ivf_train_kmeans(
 
     Deterministic by construction: init = ivf_seeds (lowest-id
     vectors), a FIXED iteration count (no data-dependent convergence
-    test), deterministic tie-breaks in the assignment, and per-cell
-    means computed in FIXED-POINT: each component is quantized to
-    ``floor(v * 2^IVF_FP_BITS)`` (an exact operation — the multiply is
-    an exponent shift, floor has no rounding-mode ambiguity), summed
-    as BIGINT (associative/commutative — order-INDEPENDENT, unlike a
-    float sum under Spark's partial aggregation), and the quantized
-    mean ``floor(sum/n) / 2^IVF_FP_BITS`` is a pure function of exact
-    integers. Training is therefore bit-portable across engines and
+    test), ivf_assign's tie-breaks, and FIXED-POINT means
+    (``functions.vectors.lloyd``): components quantize to
+    ``floor(v * 2^IVF_FP_BITS)``, exact BIGINT sums are
+    order-INDEPENDENT, and ``floor(sum/n) / 2^IVF_FP_BITS`` is a pure
+    function of exact integers. Training is therefore bit-portable and
     the trained query is HASH-gated against the DuckDB twin
-    (oracle_dataops.cosine_topk_ivf_trained_sql); recall is graded in
-    BENCH/ANN_RECALL.md. Quantization error per component is
-    < 2^-IVF_FP_BITS — orders of magnitude below the centroid noise
-    floor of k-means itself. Exactness bound: |sum| < 2^53 needs
-    fewer than 2^(53-IVF_FP_BITS) ~ 536M vectors per cell (components
-    are O(1)); size cells accordingly.
-
-    Scale shape: each iteration is ivf_assign's one-row-per-vector
-    shuffle plus a (cell, pos) mean over the exploded corpus —
-    corpus×dim rows into a two-phase avg with map-side partials
-    (uniform keys: pos is uniform, cells are bounded by the quantizer),
-    then a k×dim regroup to rebuild centroid arrays. No corpus-sized
-    broadcast, no window over the corpus, no driver-side data moves.
-    Empty cells keep their previous centroid (left-join coalesce), so
-    k never silently shrinks. The k-row seed frame is lineage-truncated
-    every iteration (functions/caching.py's loop policy): ``seeds`` has two
-    consumers per round (the assignment and the empty-cell fallback),
-    so an untruncated loop would DOUBLE the lazy plan each iteration —
-    2^n_iters clones of the corpus scan by the time a consumer runs.
+    (oracle_dataops.cosine_topk_ivf_trained_sql). Exactness bound:
+    |sum| < 2^53, i.e. fewer than ~536M vectors per cell. Empty cells
+    keep their previous centroid, so k never silently shrinks. Scale
+    shape: the centroids stay on the driver; each iteration is one Arrow
+    pass over the corpus (no shuffle, no cache, no lineage to truncate).
     """
-    seeds = ivf_seeds(emb, n_cells, id_col, vec_col)
-    # every Lloyd iteration re-reads the vector frame (assignment) —
-    # persist it ONCE for the loop instead of n_iters parquet scans
-    # (tracked: functions/caching.py). Measured NEUTRAL at sf0.1
-    # (5.6s -> 5.8s best-of-3, within noise: the toy table scans in
-    # ~ms and the loop is stage-latency-bound), but n_iters scans of a
-    # production-scale training sample is the term that dominates at
-    # 100 TB — the persist is for that regime.
-    vecs = persist_tracked(
-        emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    )
-    for _ in range(int(n_iters)):
-        assigned = ivf_assign(vecs, seeds, "vec_id", "embedding")
-        dims = assigned.select(
-            "cell", F.posexplode("embedding").alias("pos", "v")
-        ).select("cell", "pos", _fp_quantize("v").alias("fv"))
-        means = dims.groupBy("cell", "pos").agg(_fp_mean("fv").alias("m"))
-        new_seeds = means.groupBy("cell").agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(pos, m))), s -> s.m)"
-            ).alias("seed")
-        )
-        seeds = truncate(
-            seeds.select("cell", F.col("seed").alias("_old"))
-            .join(new_seeds, "cell", "left")
-            .select("cell", F.coalesce("seed", "_old").alias("seed"))
-        )
-    return seeds
+    vecs = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
+    return lloyd(vecs, ivf_seeds(emb, n_cells, id_col, vec_col), n_iters)
 
 
 def cosine_topk_ivf_trained(
@@ -561,8 +437,9 @@ def semdedup(
     recall trade; embedding_neardup_lsh is the data-independent
     counterpart whose buckets don't adapt to the data).
 
-    Scale shape: cells come from ``ivf_seeds``/``ivf_assign`` (one
-    row-per-vector shuffle; the seed table broadcasts). The pairwise
+    Scale shape: cells and each vector's centroid cosine come from
+    ``ivf_seeds``/``ivf_assign`` (one nearest-centroid pass, no
+    shuffle; the seed table is collected to the driver). The pairwise
     stage shuffles on cell id and is quadratic per cell, so cell
     occupancy is the lever: size ``n_cells ~ corpus / target_cell``
     (SemDeDup itself runs k-means with k in the tens of thousands at
@@ -570,33 +447,15 @@ def semdedup(
     cells keep all members rather than detonating the join, mirrored
     bit-for-bit in the DuckDB twin.
     """
+    # Self-dot (_d2) carried for the pair stage (self-dot note). Four
+    # consumers (cell sizes, both pair sides, the final flag join)
+    # would each re-run the assignment — the minhash_lsh_pairs persist
+    # rationale; MEMORY_AND_DISK spills instead of OOMing.
     seeds = ivf_seeds(emb, n_cells, id_col, vec_col)
-    # Self-dot hoisted and CARRIED through the persisted assignment
-    # (_d2): the pairwise stage below then pays one unrolled dot per
-    # pair instead of three folds — identical bits (self-dot note).
-    assigned = (
+    assigned = persist_tracked(
         ivf_assign(emb, seeds, id_col, vec_col)
         .withColumn("_d2", F.expr(dot_expr("embedding", "embedding")))
-        .join(
-            F.broadcast(
-                seeds.withColumn("_sd2", F.expr(dot_expr("seed", "seed")))
-            ),
-            "cell",
-        )
-        .withColumn(
-            "centroid_cos",
-            F.expr(
-                f"try_divide({dot_expr('embedding', 'seed')}, sqrt(_d2 * _sd2))"
-            ),
-        )
-        .select("id", "embedding", "cell", "centroid_cos", "_d2")
     )
-    # Four consumers (cell sizes, both pair sides, the final flag join)
-    # would each recompute the assignment's crossJoin + max_by shuffle
-    # — the minhash_lsh_pairs persist rationale verbatim; rows are one
-    # embedding + three scalars, MEMORY_AND_DISK spills instead of
-    # OOMing, lineage recomputes on executor loss.
-    assigned = persist_tracked(assigned)
     sizes = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("_csz"))
     small = assigned.join(F.broadcast(sizes), "cell").filter(
         F.col("_csz") <= int(max_cell)
@@ -728,28 +587,13 @@ def pq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(vec_id, codes array<int>): per subspace, the L2^2-nearest
-    codeword (ties -> lowest code).
-
-    Scale shape: the corpus explodes to m rows per vector, joins the
-    broadcast (m x ksub)-row codebook, and the argmin is a min_by that
-    completes map-side — the only shuffles carry m rows then 1 row per
-    vector. No corpus broadcast, no window over the corpus.
+    codeword (numbers ascending, then NaN, then NULL; ties -> lowest
+    code). The (m x ksub)-row codebook is collected to the driver and
+    the corpus streams through ``functions.vectors.nearest_codes`` —
+    no shuffle, one output row per input row.
     """
-    sv = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.explode(F.expr(_subvectors(vec_col, m, dim))).alias("_s"),
-    ).select("vec_id", F.col("_s.sub").alias("sub"), F.col("_s.sv").alias("sv"))
-    scored = sv.join(F.broadcast(codebooks), "sub").withColumn(
-        "_d", F.expr(l2sq_expr("sv", "codeword", dim // m))
-    )
-    picked = scored.groupBy("vec_id", "sub").agg(
-        F.min_by("code", F.struct(F.col("_d"), F.col("code"))).alias("code")
-    )
-    return picked.groupBy("vec_id").agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(sub, code))), s -> s.code)"
-        ).alias("codes")
-    )
+    vecs = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
+    return nearest_codes(vecs, codebooks.select("sub", "code", "codeword"), dim // m)
 
 
 # ADC fold over (codes, luts): partial L2^2 per subspace summed
@@ -881,8 +725,8 @@ def pq_topk_ivf(
 
     Both quantizers are the SEEDED oracle-exact variants (swap in
     ivf_train_kmeans cells / trained codebooks at deployment). At
-    100 TB: the corpus is assigned and encoded ONCE (one row per
-    vector through each shuffle), the codes table is the only thing a
+    100 TB: the corpus is assigned and encoded ONCE (one
+    nearest-centroid pass each), the codes table is the only thing a
     query reads, and per-query work is nprobe cells x m lookups per
     candidate.
     """
@@ -919,60 +763,18 @@ def pq_train_kmeans(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Trained PQ codebooks: deterministic Lloyd k-means run PER
-    SUBSPACE, all m subspaces in ONE lineage (the sub column keys the
-    aggregations — no per-subspace jobs). Drop-in for
+    SUBSPACE, all m subspaces in one pass per iteration. Drop-in for
     :func:`pq_codebooks_seeded`'s output; same determinism contract as
-    :func:`ivf_train_kmeans` (seeded init, fixed iterations, (d, code)
-    tie-breaks) and the same FIXED-POINT means (exact BIGINT sums,
-    quantized division — see ivf_train_kmeans), so trained codebooks
-    are bit-portable and HASH-gated against the DuckDB twin
-    (oracle_dataops.pq_topk_trained_sql) as well as recall-graded.
-
-    Scale shape per iteration: corpus x m rows join the broadcast
-    (m x ksub)-row codebook, the argmin min_by completes map-side (one
-    row per (vector, sub) crosses the shuffle), then a
-    (sub, code, pos) mean over the exploded subvectors — uniform keys,
-    two-phase with map-side partials. The codebook frame is
-    lineage-truncated every iteration (functions/caching.py's loop
-    policy).
+    :func:`ivf_train_kmeans` (seeded init, fixed iterations,
+    :func:`pq_encode`'s tie-breaks) and the same FIXED-POINT means
+    (exact BIGINT sums, quantized division — see ivf_train_kmeans), so
+    trained codebooks are bit-portable and HASH-gated against the
+    DuckDB twin (oracle_dataops.pq_topk_trained_sql) as well as
+    recall-graded. Scale shape: ivf_train_kmeans's, per (sub, code).
     """
     cb = pq_codebooks_seeded(emb, m, ksub, dim, id_col, vec_col)
-    sv = persist_tracked(
-        emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.explode(F.expr(_subvectors(vec_col, m, dim))).alias("_s"),
-        ).select("vec_id", F.col("_s.sub").alias("sub"), F.col("_s.sv").alias("sv"))
-    )
-    for _ in range(int(n_iters)):
-        assigned = (
-            sv.join(F.broadcast(cb), "sub")
-            .withColumn("_d", F.expr(l2sq_expr("sv", "codeword", dim // m)))
-            .groupBy("vec_id", "sub")
-            .agg(
-                F.min_by(
-                    F.struct("code", "sv"), F.struct(F.col("_d"), F.col("code"))
-                ).alias("_k")
-            )
-            .select("sub", F.col("_k.code").alias("code"), F.col("_k.sv").alias("sv"))
-        )
-        means = assigned.select(
-            "sub", "code", F.posexplode("sv").alias("pos", "v")
-        ).select(
-            "sub", "code", "pos", _fp_quantize("v").alias("fv")
-        ).groupBy("sub", "code", "pos").agg(_fp_mean("fv").alias("m"))
-        new_cb = means.groupBy("sub", "code").agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(pos, m))), s -> s.m)"
-            ).alias("codeword")
-        )
-        cb = truncate(
-            cb.select("sub", "code", F.col("codeword").alias("_old"))
-            .join(new_cb, ["sub", "code"], "left")
-            .select(
-                "sub", "code", F.coalesce("codeword", "_old").alias("codeword")
-            )
-        )
-    return cb
+    vecs = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
+    return lloyd(vecs, cb, n_iters, dim // m)
 
 
 def pq_topk_trained(

@@ -16,6 +16,7 @@ match exactly — no tolerance needed.
 from __future__ import annotations
 
 from logzilla_spark.functions.hashing import P31, hyperplanes, md5_long_sql, minhash_coeffs
+from logzilla_spark.functions.vectors import IVF_FP_BITS
 from logzilla_spark.operators import similarity
 from logzilla_spark.operators.dedup import (
     COSINE_THRESHOLD,
@@ -1069,7 +1070,7 @@ def cosine_topk_ivf_sql(
 ) -> str:
     """Twin of similarity.cosine_topk_ivf: same seeded quantizer (k
     lowest-id vectors), same nearest-cell assignment (cos DESC, cell
-    ASC == Spark's max_by over (cos, -cell)), same nprobe cut."""
+    ASC, NULL last == functions.vectors), same nprobe cut."""
     cos_assign = _cosine_sql("e.embedding", "s.seed", dim)
     cos_probe = _cosine_sql("p.embedding", "s.seed", dim)
     cos = _cosine_sql("pc.pe", "a.embedding", dim)
@@ -1124,7 +1125,7 @@ def pq_topk_sql(
 ) -> str:
     """Twin of similarity.pq_topk: seeded codebooks (subvectors of the
     ksub lowest-id vectors), per-subspace argmin encode (L2^2 ASC,
-    code ASC — Spark's min_by over (d, code)), and the ADC score as a
+    code ASC, NULL last == functions.vectors), and the ADC score as a
     sub-ordered pinned fold (list_sort by sub, then list_reduce
     left-to-right == Spark's zip_with(codes, luts) aggregate)."""
     dsub = dim // m
@@ -1262,11 +1263,12 @@ FROM scored QUALIFY rank <= {int(k)}"""
 
 
 def _fp_mean_sql(fv: str) -> str:
-    """Twin of similarity._fp_mean: quantized mean of fixed-point
+    """Twin of functions.vectors._means: quantized mean of fixed-point
     BIGINT components — exact sum, one IEEE double division, floor,
     exact exponent-shift rescale. Bit-identical to Spark because every
-    non-exact step is a single deterministic IEEE operation."""
-    fp = float(1 << similarity.IVF_FP_BITS)
+    non-exact step is a single deterministic IEEE operation (but
+    ``count(*)`` counts a NULL-vector member: ROADMAP item 2)."""
+    fp = float(1 << IVF_FP_BITS)
     return (
         f"CAST(floor(CAST(sum({fv}) AS DOUBLE) / count(*)) AS DOUBLE)"
         f" / {fp!r}"
@@ -1274,8 +1276,8 @@ def _fp_mean_sql(fv: str) -> str:
 
 
 def _fp_quantize_sql(v: str) -> str:
-    """Twin of similarity._fp_quantize: floor(v * 2^IVF_FP_BITS)."""
-    fp = float(1 << similarity.IVF_FP_BITS)
+    """Twin of functions.vectors._fixed: floor(v * 2^IVF_FP_BITS)."""
+    fp = float(1 << IVF_FP_BITS)
     return f"CAST(floor(CAST({v} AS DOUBLE) * {fp!r}) AS BIGINT)"
 
 
@@ -1284,7 +1286,7 @@ def _ivf_kmeans_ctes(dim: int, n_cells: int, n_iters: int) -> tuple[str, str]:
 
     Mirrors similarity.ivf_train_kmeans iteration for iteration: init
     = the seeded quantizer, per-iteration nearest-cell assignment
-    (cos DESC, cell ASC == Spark's max_by over (cos, -cell)),
+    (cos DESC, cell ASC == functions.vectors' nearest-centroid order),
     fixed-point per-(cell, dimension) means, empty cells keep the
     previous centroid (left-join coalesce). A fixed iteration count is
     what makes the unroll legal."""

@@ -7,8 +7,8 @@ embeddings table is only 2k vectors, far too small to see a plan break
 — by synthesizing 1x / 50x / 500x corpora (2k / 100k / 1M vectors, dim
 64) and timing pq_encode, pq_topk and pq_topk_ivf with a FIXED probe
 set. Linear wall growth with corpus size = the plan the operators
-promise (narrow explode, broadcast codebooks, map-side argmin, one
-row/vector shuffles); superlinear growth would mean a hidden
+promise (encoding as one nearest-centroid pass against the collected
+codebooks, broadcast probe LUTs); superlinear growth would mean a hidden
 corpus-squared stage.
 
 Synthesis is deterministic (hash-perturbed replicas, new id ranges) so

@@ -430,6 +430,30 @@ def test_semdedup_twin(spark, tmp_path_factory):
     _assert_twin(similarity.semdedup(spark.read.parquet(path)), od.semdedup_sql(path))
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["pq_topk", "pq_topk_ivf", "cosine_topk_ivf", "cosine_topk_ivf_trained"],
+)
+def test_centroid_topk_twins(spark, tmp_path_factory, name):
+    """IVF and PQ top-k on the ten rows without the cosine-kernel edge
+    rows. Every row seeds a cell and a code, so the NULL embedding
+    (id 10) is code 9's codeword in every subspace: its L2 distance is
+    NULL and ranks after every real codeword, as the twins' ``ORDER BY
+    d`` (NULLS LAST) ranks it. The cosine rows pin NULL-last cell
+    assignment for the zero vector and the NULL embedding."""
+    from pyspark.sql import functions as F
+
+    from logzilla_spark.operators import similarity
+
+    path = _write_emb(tmp_path_factory, edge_rows=False)
+    emb = spark.read.parquet(path)
+    probes = emb.filter(F.col("vec_id") % 5 == 0)  # id 5 real, id 10 NULL
+    _assert_twin(
+        getattr(similarity, name)(emb, probes, k=5),
+        getattr(od, name + "_sql")(path, k=5, probe_mod=5),
+    )
+
+
 def test_video_frames_twin(spark, tmp_path_factory):
     """Video frame explosion on hostile rows: NULL payload and NULL
     duration emit no frames, short payloads clip slices, zero duration

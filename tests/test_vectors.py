@@ -1,6 +1,7 @@
-"""The blocked Arrow cosine kernel (functions/vectors.py).
+"""The blocked Arrow kernels (functions/vectors.py): cosine and the
+nearest-centroid pass behind IVF, PQ and k-means.
 
-Its column loop must give the bits of the scalar fold, and block edges
+Their column loops must give the bits of the scalar fold, and block edges
 must not change results: a batch is cut into row blocks and the
 collected matrix into tiles so that no block holds more than
 ``PAIR_BLOCK`` pairs. Shrinking the constant to a few rows puts many
@@ -57,3 +58,71 @@ def test_small_blocks_return_the_same_rows(spark, monkeypatch, name):
     small = canon_rows(fn(spark, SF01).toPandas())
     assert sum(default.values()) > 0
     assert small == default
+
+
+def test_block_l2_equals_the_sequential_loop():
+    """Every squared L2 has the bits of the scalar fold: float32 ->
+    double differences squared and summed left to right from 0.0."""
+    rng = np.random.RandomState(5)
+    rows = [list(map(float, rng.randn(8).astype(np.float32))) for _ in range(30)]
+    _, cols, _ = vectors._groups(pa.array(rows, pa.list_(pa.float32())))[8]
+    got = vectors._l2sq(cols, cols)
+
+    def l2sq(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + (x - y) * (x - y)
+        return acc
+
+    want = [[l2sq(a, b) for b in rows] for a in rows]
+    assert got.tobytes() == np.array(want).tobytes()
+
+
+def test_nearest_centroid_order():
+    """Cosine: NaN first, numbers descending, NULL last. L2: numbers
+    ascending, then NaN, then NULL. Ties go to the lower centroid."""
+    nan = float("nan")
+    cents = pa.array(
+        [[1.0, 0.0], [1.0, 0.0], [nan, 0.0], [0.0, 1.0], None, [1.0]],
+        pa.list_(pa.float64()),
+    )
+    groups = vectors._groups(cents)
+    rows = pa.array([[2.0, 0.0], None], pa.list_(pa.float64()))
+    order, _, null = vectors._ranked(rows, groups, 6, cosine=True)
+    assert order[0].tolist() == [2, 0, 1, 3, 4, 5]
+    assert null[1].all() and order[1].tolist() == [0, 1, 2, 3, 4, 5]
+    order, score, _ = vectors._ranked(rows, groups, 6, cosine=False)
+    assert order[0].tolist() == [0, 1, 3, 2, 4, 5]
+    assert score[0, :2].tolist() == [1.0, 1.0]
+
+
+CENTROID_QUERIES = ("q_sim_topk_ivf_trained", "q_sim_topk_pq_trained", "q_dedup_semdedup")
+
+
+@pytest.mark.parametrize("name", CENTROID_QUERIES)
+def test_small_centroid_blocks_return_the_same_rows(spark, monkeypatch, name):
+    """Assignment, encoding and the Lloyd partials over blocks of a few
+    rows (so blocks split cells and codes) give the same rows."""
+    fn = entrymod.queries()[name]
+    default = canon_rows(fn(spark, SF01).toPandas())
+    # 64 scores: 4-row blocks against 16 cells or 16 codes
+    monkeypatch.setattr(vectors, "PAIR_BLOCK", 64)
+    small = canon_rows(fn(spark, SF01).toPandas())
+    assert sum(default.values()) > 0
+    assert small == default
+
+
+def test_training_leaves_no_cached_state(spark):
+    """Both k-means trainers hold their centroids on the driver: no
+    persisted RDD and no tracked frame survives them."""
+    from logzilla_spark.functions import caching
+    from logzilla_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{SF01}/embeddings.parquet")
+    jsc = spark.sparkContext._jsc
+    rdds, tracked = jsc.getPersistentRDDs().size(), len(caching._TRACKED)
+    seeds = similarity.ivf_train_kmeans(emb, n_cells=4, n_iters=2).collect()
+    books = similarity.pq_train_kmeans(emb, n_iters=2).collect()
+    assert len(seeds) == 4 and len(books) == similarity.PQ_M * similarity.PQ_KSUB
+    assert jsc.getPersistentRDDs().size() == rdds
+    assert len(caching._TRACKED) == tracked
