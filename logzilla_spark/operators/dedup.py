@@ -3,16 +3,18 @@
 The reference stops at parse->store (SURVEY.md §2.4 — no joins, no
 aggregation), but a web-scale corpus engine needs dedup as a
 first-class stage. Five strategies. Exact dedup, MinHash and SimHash
-are JVM-side Catalyst expressions (higher-order functions, no Python
-UDFs in the hot path — same rule as the parse stage, BASELINE.json
-input_hint); n-gram Jaccard builds its gram sets the same way and counts
-overlaps in the blocked Arrow kernel of ``functions.overlap``; exact
+features are JVM-side Catalyst expressions (higher-order functions, no
+Python UDFs in the hot path — same rule as the parse stage,
+BASELINE.json input_hint); MinHash candidates and verify, and n-gram
+Jaccard overlap counts, run in the blocked Arrow set-overlap kernel of
+``functions.overlap``; exact
 embedding cosine is the blocked Arrow kernel of ``functions.vectors``,
 whose pinned-order numpy sums give the bits of :func:`cosine_expr`:
 
 - exact dedup            : content-hash groupBy
 - MinHash + LSH          : char-shingle -> universal-hash signatures ->
-                           banded bucket self-join -> est + exact verify
+                           band buckets as postings -> est + exact
+                           verify per block of documents
 - SimHash                : token-hash bit voting -> fingerprint ->
                            byte-block candidate join -> hamming filter
 - n-gram Jaccard         : word-3-gram sets, exact overlap counts per
@@ -28,11 +30,12 @@ Scale notes (100 TB / 1000 executors):
 - Signatures/fingerprints are one narrow projection per doc — no
   shuffle; cost is a single pass over text bytes (md5 per shingle,
   then cheap modular arithmetic for all K hash functions).
-- The LSH candidate join shuffles on (band_id, band_hash) — a
+- LSH buckets are keyed on (band_id, band_hash) — a
   high-cardinality, well-distributed key (hash output), so no skew by
   construction; hot buckets (boilerplate pages) are bounded by
   ``max_bucket`` (drop pathological buckets, the standard
-  production guard).
+  production guard). The asymmetric delta-vs-corpus paths join on
+  that key and shuffle on it at scale.
 - The exact-verify stage runs only on candidates (est_sim prefilter
   first — the cheap signature check gates the expensive shingle
   intersection), the classic filter-verify funnel.
@@ -48,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 from logzilla_spark.functions.caching import persist_tracked
-from logzilla_spark.functions.overlap import jaccard_pairs_above
+from logzilla_spark.functions.overlap import jaccard_pairs_above, minhash_pairs_above
 from logzilla_spark.functions.vectors import cosine_pairs_above
 
 from logzilla_spark.functions.hashing import (
@@ -277,17 +280,17 @@ def minhash_signatures(
     return _minhash_features(df, id_col, text_col, n_hashes).select("id", "sig")
 
 
+def _band_hash(k: int) -> Column:
+    """LSH band ``k``'s bucket hash of the ``sig`` column."""
+    return md5_long(
+        F.concat_ws("|", *[F.element_at("sig", k * LSH_ROWS + r + 1) for r in range(LSH_ROWS)])
+    )
+
+
 def minhash_band_hashes(sig_df: DataFrame) -> DataFrame:
     """Explode signatures into (id, band_id, band_hash) LSH bucket keys."""
     bands = [
-        F.struct(
-            F.lit(k).alias("band_id"),
-            md5_long(
-                F.concat_ws(
-                    "|", *[F.element_at("sig", k * LSH_ROWS + r + 1) for r in range(LSH_ROWS)]
-                )
-            ).alias("band_hash"),
-        )
+        F.struct(F.lit(k).alias("band_id"), _band_hash(k).alias("band_hash"))
         for k in range(LSH_BANDS)
     ]
     return sig_df.select(
@@ -305,155 +308,38 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash LSH.
 
-    Pipeline: one persisted per-doc feature pass (sig + hashed
-    shingles) -> guarded band rows (shuffle key = (band_id,
-    band_hash), uniform) -> bucket self-join -> distinct pairs ->
-    signature est_sim prefilter -> exact shingle-Jaccard verify.
+    Pipeline: one per-doc feature projection (sig, the LSH_BANDS band
+    hashes, hashed shingles) collected once with ``toArrow()`` ->
+    ``functions.overlap.minhash_pairs_above``: each (band_id,
+    band_hash) bucket is a set element, buckets held by more than
+    ``max_bucket`` rows are dropped (boilerplate pages; a NULL-id row
+    counts but never pairs), and per block of doc_a documents the
+    distinct candidate pairs get the signature est_sim prefilter and
+    the exact shingle-Jaccard verify before any row leaves the task.
+    No self-join, no cached frame.
 
     Returns (doc_a, doc_b, est_sim, inter_n, union_n, jaccard) with
     jaccard >= min_jaccard. est_sim is an exact multiple of
     1/n_hashes and jaccard an exact int/int division — both
     bit-portable to the DuckDB oracle (which mirrors the max_bucket
-    guard too).
+    guard too). A duplicate id gives one row per pair of its feature
+    rows, as a join on doc id would.
 
-    Scale shape (100 TB): every join here is a shuffle hash join keyed
-    on doc id or bucket — NOTHING corpus-sized is ever MANDATED into a
-    broadcast (AQE downgrades to broadcast when a side genuinely fits,
-    which is the adaptive behavior you want). The bucket-size guard is
-    a window count — sort-based and disk-spillable, so one boilerplate
-    mega-bucket cannot blow aggregation memory, and the guard shares
-    ONE signature lineage with the bucket self-join (a count-join
-    guard recomputes the whole md5+sig pass a second time: measured
-    +2 s at sf0.1). Per-bucket join blowup stays O(max_bucket^2)
-    because the filter runs BEFORE the join.
+    Size assumption: the features fit the driver — the sf1 documents
+    corpus is ~50k signatures of 16 longs and at most ~15M shingle
+    hashes (int32, one per text character at most), collected once as
+    ``ngram_jaccard_pairs`` collects its gram sets.
 
-    Considered and rejected: gating the est_sim join on the per-pair
-    SHARED-BAND COUNT (free from the pre-distinct expansion). A shared
-    band only LOWER-bounds est_sim (one shared band ⇒ >= LSH_ROWS
-    matched positions); matched positions need not align into whole
-    bands, so a pair at exactly min_est can share as FEW as one band —
-    the count can never soundly reject, only confirm, and confirming
-    doesn't skip anything because est_sim is an output column. The
-    honest cut was making the pair expansion codegen (the self-join
-    above) instead of shrinking it unsoundly.
+    Considered and rejected: gating the est_sim check on the per-pair
+    SHARED-BAND COUNT. A shared band only LOWER-bounds est_sim (one
+    shared band ⇒ >= LSH_ROWS matched positions); matched positions
+    need not align into whole bands, so a pair at exactly min_est can
+    share as FEW as one band — the count can never soundly reject.
     """
-    # Per-doc features — the signature AND the hashed shingle set —
-    # built in ONE lineage (normalize once, md5 once) and PERSISTED:
-    # the plan consumes this table three times (band bucketing, doc_a
-    # verify side, doc_b verify side), and Spark recomputes an
-    # unpersisted lineage once per consumer (ReuseExchange does not
-    # fire across DeduplicateRelations' clones), i.e. three full
-    # normalize+shingle+md5 passes over the corpus. MEMORY_AND_DISK is
-    # the scale-safe level: the feature row (16-long sig + distinct
-    # shingle hashes) is a few KB/doc — smaller than the text it
-    # summarizes — and spills per-executor instead of OOMing; on
-    # executor loss Spark recomputes the lost partitions from lineage
-    # (unlike localCheckpoint, which would fail the job). Measured at
-    # sf0.1: 6.7-13.1s -> 5.2s steady-state, bit-identical output.
-    # Lifetime: the operator returns a lazy plan, so it cannot unpersist
-    # on the caller's behalf without forfeiting the reuse it exists to
-    # provide; the entry lives until release_operator_caches() (a
-    # long-lived session calls it between corpora) or Spark's LRU
-    # evicts it (MEMORY_AND_DISK, so eviction is safe). A caller that
-    # already cached this feature plan keeps its entry: persist_tracked
-    # skips a cached plan.
-    feat = persist_tracked(_minhash_features(df, id_col, text_col))
-    bands = minhash_band_hashes(feat.select("id", "sig"))
-    if max_bucket is not None:
-        # Pre-join guard: drop pathological buckets (boilerplate)
-        # BEFORE the bucket self-join so per-bucket pair blowup is
-        # genuinely O(max_bucket^2), never corpus-sized. A window count
-        # (the DuckDB twin's QUALIFY, same semantics) buffers bucket
-        # rows in a spillable sorter — bounded memory even for a
-        # corpus-sized bucket — and reuses the bands lineage instead of
-        # recomputing it for a count join.
-        w = Window.partitionBy("band_id", "band_hash")
-        bands = (
-            bands.withColumn("_bn", F.count(F.lit(1)).over(w))
-            .filter(F.col("_bn") <= max_bucket)
-            .drop("_bn")
-        )
-    # Candidate pairs via a bucket SELF-JOIN on the persisted band
-    # list: shuffle both sides by (band_id, band_hash) — the same key
-    # the previous collect_list aggregation shuffled on — join within
-    # the bucket, keep a < b, distinct. History of this stage, all
-    # measured at sf0.1 steady-state:
-    #   1. self-join over the UNPERSISTED lineage: recomputed the
-    #      signature pass once per plan consumer (DeduplicateRelations
-    #      clones defeat ReuseExchange) — replaced in r3 by
-    #   2. collect_list + a flatten(transform(...)) pair expansion:
-    #      one aggregation, but the expansion runs as INTERPRETED
-    #      higher-order lambdas (no codegen — the SimHash lesson) and
-    #      cost ~2s of the operator's 7.6s — replaced by
-    #   3. this self-join over the PERSISTED guarded band rows (the
-    #      persist makes variant 1's recompute concern moot): the join
-    #      and the a<b filter are whole-stage codegen; 7.6s -> 5.7s.
-    # Per-bucket blowup stays bounded by the max_bucket guard above;
-    # at 100 TB the shuffle carries (8-byte key, 8-byte id) rows —
-    # comparable volume to the partial collect_list rows it replaces.
-    bands = persist_tracked(bands)
-    bl = bands.select(
-        F.col("band_id").alias("_bi"),
-        F.col("band_hash").alias("_bh"),
-        F.col("id").alias("doc_a"),
+    feats = _minhash_features(df, id_col, text_col).select(
+        "id", "sig", F.array(*[_band_hash(k) for k in range(LSH_BANDS)]), "_sh"
     )
-    br = bands.select(
-        F.col("band_id").alias("_bi"),
-        F.col("band_hash").alias("_bh"),
-        F.col("id").alias("doc_b"),
-    )
-    cand = (
-        bl.join(br, ["_bi", "_bh"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    # Verify runs on HASHED shingle sets (array<long>): 8-byte longs
-    # intersect ~3x faster than 5-char strings; hash collisions
-    # (2^-31 per pair) are computed identically by the DuckDB twin, so
-    # the oracle still matches bits. Measured alternatives, both SLOWER
-    # on the dup-heavy documents corpus where ~70% of candidates
-    # survive the est prefilter:
-    # (a) exact verify via the exploded inverted index (count matching
-    #     shingles per pair, the ngram_jaccard_pairs trick) materializes
-    #     |pairs| x |shingles/doc| join rows (~140M at sf0.1) — 3x
-    #     slower than joining the arrays and intersecting in place;
-    # (b) carrying signatures INTO the bucket aggregation to compute
-    #     est_sim during pair expansion copies two 16-long sigs per
-    #     exploded pair (pre-distinct, so x8 band duplication) — 2x
-    #     slower than joining the 5k-row sig table after distinct.
-    # Filter-verify funnels only pay off when the filter is selective;
-    # here the honest hot path is the verify itself.
-    # (r6, measured and REJECTED: a staged attach — narrow sig frames
-    # first, est gate, then the heavy _sh arrays for survivors only
-    # (guide §8 "decide with small rows") — ran 21.4 -> 30 s in an
-    # ABBA pair at 50k docs / 19.3M candidates. At batch scale every
-    # attach join is a BroadcastHashJoin, so the arrays never shuffle
-    # per-pair and staging only doubled the broadcast-relation builds;
-    # the single fat join per side is the right local shape, and at
-    # fleet scale AQE turns the same two joins into shuffle joins
-    # keyed by doc id. scripts/abba_minhash_r06.py reproduces.)
-    fa = feat.select(
-        F.col("id").alias("doc_a"), F.col("sig").alias("_sa"), F.col("_sh").alias("_ga")
-    )
-    fb = feat.select(
-        F.col("id").alias("doc_b"), F.col("sig").alias("_sb"), F.col("_sh").alias("_gb")
-    )
-    return (
-        cand.join(fa, "doc_a")
-        .join(fb, "doc_b")
-        .withColumn("est_sim", F.expr(_est_expr("_sa", "_sb")))
-        # filter-verify funnel: the exact shingle intersection below
-        # only runs on pairs surviving the signature prefilter
-        .filter(F.col("est_sim") >= min_est)
-        .withColumn("inter_n", F.expr("size(array_intersect(_ga, _gb))"))
-        .withColumn("union_n", F.expr("size(_ga) + size(_gb) - inter_n"))
-        .withColumn(
-            "jaccard", F.col("inter_n").cast("double") / F.col("union_n").cast("double")
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("doc_a", "doc_b", "est_sim", "inter_n", "union_n", "jaccard")
-    )
+    return minhash_pairs_above(feats, N_MINHASH, min_est, min_jaccard, max_bucket)
 
 
 def minhash_lsh_pairs_against(
@@ -469,9 +355,11 @@ def minhash_lsh_pairs_against(
     reference corpus — the production recrawl/ingest-batch shape
     (is this new page a near-copy of something we already keep?).
 
-    Same feature/band/verify pipeline as :func:`minhash_lsh_pairs`,
-    but the candidate stage is a band join BETWEEN the two sides, not
-    a corpus self-join: no corpus-corpus pairs are ever generated, so
+    Same features, bands and verify rules as :func:`minhash_lsh_pairs`,
+    but as Spark joins: the candidate stage is a band join BETWEEN the
+    two sides, and the corpus side is never collected to the driver
+    (it may be a corpus-sized registry narrowed to the delta's
+    buckets). No corpus-corpus pairs are ever generated, so
     the cost scales with |delta| x bucket overlap — at 100 TB the
     committed corpus' features/bands are computed ONCE (or read from
     a maintained band registry, the batch analog of
@@ -533,9 +421,9 @@ def _pairs_between(
         F.col("id").alias("doc_old"),
     )
     cand = bd.join(bc, ["_bi", "_bh"]).select("doc_new", "doc_old").distinct()
-    # single fat attach per side + unrolled est — the
-    # minhash_lsh_pairs r6 shape (see its verify comment for the
-    # measured rejection of staged attachment). A corpus-era committed
+    # single fat attach per side + unrolled est (OPTIMIZATION_r06.md
+    # records the measured rejection of staged attachment at batch
+    # scale). A corpus-era committed
     # ``sh`` column that is still array<bigint> coerces the int delta
     # side up in array_intersect — identical values, so serving stays
     # bit-transparent across index eras.
@@ -865,7 +753,7 @@ def simhash_pairs(
         "id", "fingerprint", F.explode(F.array(*blocks)).alias("b")
     ).select("id", "fingerprint", "b.block_id", "b.block_val")
     if max_bucket is not None:
-        # Pre-aggregation guard (same shape as minhash_lsh_pairs): drop
+        # Pre-aggregation guard (same shape as _pairs_between's): drop
         # pathological buckets BEFORE collect_list so per-group
         # aggregation state is genuinely O(max_bucket) — a post-agg
         # size filter would let one boilerplate bucket accumulate a

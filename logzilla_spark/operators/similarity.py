@@ -449,8 +449,8 @@ def semdedup(
     """
     # Self-dot (_d2) carried for the pair stage (self-dot note). Four
     # consumers (cell sizes, both pair sides, the final flag join)
-    # would each re-run the assignment — the minhash_lsh_pairs persist
-    # rationale; MEMORY_AND_DISK spills instead of OOMing.
+    # would each re-run the assignment — the lazy-plan persist policy
+    # of functions/caching.py; MEMORY_AND_DISK spills instead of OOMing.
     seeds = ivf_seeds(emb, n_cells, id_col, vec_col)
     assigned = persist_tracked(
         ivf_assign(emb, seeds, id_col, vec_col)

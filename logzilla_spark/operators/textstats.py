@@ -1643,8 +1643,8 @@ def dsir_scores(
     # ONE corpus scan: the (id, bucket) occurrence stream is built once
     # and PERSISTED — it has two consumers (global raw counts and the
     # scoring aggregation) and Spark recomputes unpersisted lineage per
-    # consumer (the minhash_lsh_pairs rationale, incl. the cache-
-    # lifetime caveat documented there). A separate global-count
+    # consumer (the lazy-plan policy, incl. the cache lifetime, is
+    # documented in functions/caching.py). A separate global-count
     # explode was a 2nd full interpreted-bigram + md5 pass over every
     # gram. The cached row is 16 bytes; MEMORY_AND_DISK spills. No
     # (id, bucket) pre-grouping: per-doc distinct buckets ~ doc tokens

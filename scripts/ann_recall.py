@@ -50,7 +50,7 @@ def main() -> None:
     from logzilla_spark.operators import similarity
     import __spark_entry__ as entry
 
-    spark = get_spark(cores=32)
+    spark = get_spark()
     emb = entry._emb(spark, sf_dir)
     probes = entry._probes(emb)
     n_vec, n_probe = emb.count(), probes.count()

@@ -79,7 +79,7 @@ def timed_scan(spark, cat: LocalCatalog, table: str) -> float:
 
 
 def main() -> int:
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark()
     ensure_pages(SF_DIR)
     records = parse_records(spark.read.parquet(pages_parquet(SF_DIR)), impl="arrow")
     wh = tempfile.mkdtemp(prefix="clustering_probe_")

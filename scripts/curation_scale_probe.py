@@ -33,7 +33,7 @@ from scripts.dedup_scale_probe import synth  # noqa: E402
 
 
 def main() -> None:
-    spark = get_spark(cores=32)
+    spark = get_spark()
     doc_rows = []
     for mult in (1, 10, 40):
         path = synth(spark, mult)
@@ -68,7 +68,7 @@ def main() -> None:
     lines = [
         "# Curation operators at scale (probe)",
         "",
-        "`scripts/curation_scale_probe.py`, local[32]. line_dedup runs on",
+        f"`scripts/curation_scale_probe.py`, {spark.sparkContext.master}. line_dedup runs on",
         "the dedup probe's synthesized documents corpora (replicated sf0.1",
         "docs — single-line word soup, so every 'line' is a whole doc: the",
         "probe times the shuffle/count-distinct/join/reassembly machinery,",

@@ -124,7 +124,7 @@ PAIR_OPS = ("minhash", "simhash", "ngram")
 
 
 def main(max_mult: int = 40, ops: tuple = PAIR_OPS) -> None:
-    spark = get_spark(cores=32)
+    spark = get_spark()
     results = []
     for mult in (1, 10, max_mult):
         path = synth(spark, mult)
@@ -151,7 +151,7 @@ def main(max_mult: int = 40, ops: tuple = PAIR_OPS) -> None:
         "Deterministic syntheses of the sf0.1 documents table"
         " (`scripts/dedup_scale_probe.py`): corpus grows Kx, planted"
         " near-dup structure grows linearly, replicas heavily perturbed"
-        " so they are not near-dups of each other. local[32], single"
+        f" so they are not near-dups of each other. {spark.sparkContext.master}, single"
         " trial per cell (host throughput drifts ±30-60%, see"
         " BENCH/BASELINE.md — read orders of magnitude, not percents)."
         " Cells: wall sec / output rows.",

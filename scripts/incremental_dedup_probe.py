@@ -79,7 +79,7 @@ def timed(fn, trials: int = 1):
 
 
 def main(max_mult: int = 40) -> None:
-    spark = get_spark(cores=32)
+    spark = get_spark()
     delta = delta_frame(spark)
     delta.count()  # materialize the source cache out of the timings
     rows = []

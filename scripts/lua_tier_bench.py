@@ -60,7 +60,7 @@ def main() -> None:
     from logzilla_spark.session import get_spark
     from logzilla_spark.testdata import ensure_pages
 
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark()
     pages = spark.read.parquet(f"{ensure_pages(SF_DIR)}/pages.parquet")
     lines = explode_lines(pages).persist()
     n_lines = lines.count()
@@ -140,7 +140,7 @@ def main() -> None:
         "# Lua execution tiers — measured (scripts/lua_tier_bench.py)",
         "",
         f"Corpus: `{SF_DIR}` pages exploded to **{n_lines:,} lines** "
-        f"(persisted; parse cost only), local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}], "
+        f"(persisted; parse cost only), {spark.sparkContext.master}, "
         f"best of {TRIALS}.",
         "",
         "**Cheap script** (one string.match, tiny claim share — all four",

@@ -73,7 +73,7 @@ def main() -> None:
     max_mult = 500
     if "--max-mult" in sys.argv:
         max_mult = int(sys.argv[sys.argv.index("--max-mult") + 1])
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark()
     probes_src = spark.read.parquet(f"{SRC}/embeddings.parquet").filter(
         "vec_id % 100 = 0"
     ).persist()
@@ -112,7 +112,7 @@ def main() -> None:
         "# PQ scale probe (scripts/pq_scale_probe.py)",
         "",
         f"Synthetic replicas of `{SRC}/embeddings.parquet` (dim "
-        f"{S.EMB_DIM}), fixed {n_probes}-probe set, local[32], best of "
+        f"{S.EMB_DIM}), fixed {n_probes}-probe set, {spark.sparkContext.master}, best of "
         f"{TRIALS}. Hash-exact correctness is the oracle's job "
         "(q_sim_topk_pq / q_sim_topk_ivfpq); this measures whether the "
         "plans stay linear in corpus size.",

@@ -24,7 +24,7 @@ def main() -> None:
     from logzilla_spark.session import get_spark
     from logzilla_spark.sources.catalog import LocalCatalog
 
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark()
     # keep staged files small enough that pruning is a real property
     # (AQE otherwise coalesces toy tables to one file)
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "128k")
@@ -98,7 +98,7 @@ def main() -> None:
     )
 
     lines = [
-        "# File-pruning probe (sf0.1, local[32])",
+        f"# File-pruning probe (sf0.1, {spark.sparkContext.master})",
         "",
         f"Generated by scripts/pruning_probe.py over {SF_DIR} "
         f"(events 100k rows / ~150 distinct user_ids, documents 5k rows "

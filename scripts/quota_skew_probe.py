@@ -72,7 +72,7 @@ def timed(fn, trials=2):
 
 
 def main(base_rows: int = 2_000_000) -> None:
-    spark = get_spark(cores=32)
+    spark = get_spark()
     rows = []
     for mult in (1, 4, 16):
         n_rows = base_rows * mult
@@ -97,7 +97,7 @@ def main(base_rows: int = 2_000_000) -> None:
         "",
         f"Reproduce: `python scripts/quota_skew_probe.py --base-rows"
         f" {base_rows}` (quota {QUOTA}/key-hour, 64 input partitions,"
-        " local[32]; best-of-2 walls, identical over-quota counts"
+        f" {spark.sparkContext.master}; best-of-2 walls, identical over-quota counts"
         " asserted per cell).",
         "",
         "| volume | rows | over-quota rows | naive one-phase s |"

@@ -19,7 +19,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", os.path.join(REPO, ".cache/sfdir/sf1x"))
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def noop(df) -> float:
@@ -49,7 +48,7 @@ def main() -> None:
     from logzilla_spark.session import get_spark
     from logzilla_spark.operators import dedup
 
-    spark = get_spark(cores=CPUS, app_name="stage_probe_r06")
+    spark = get_spark(app_name="stage_probe_r06")
     sc = spark.sparkContext
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     out: dict[str, object] = {"sf": os.path.basename(os.path.normpath(sf))}

@@ -66,7 +66,7 @@ def main() -> int:
     import __spark_entry__ as entry
     from logzilla_spark.session import get_spark
 
-    spark = get_spark(cores=8, app_name="verify-oracle")
+    spark = get_spark(app_name="verify-oracle")
     qs, osql = entry.queries(), entry.oracle_sql(SF_DIR)
     assert set(osql) <= set(qs), sorted(set(osql) - set(qs))
     con = duckdb.connect()

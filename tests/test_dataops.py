@@ -225,6 +225,77 @@ def test_ngram_jaccard_null_id_counts_toward_guard(spark, tmp_path):
     assert [(r.doc_a, r.doc_b) for r in kept] == [(1, 2)]
 
 
+def test_minhash_block_boundaries(spark, monkeypatch):
+    """Blocks of a few documents (cut by hits and by shingle probes)
+    give the rows of one whole block."""
+    from logzilla_spark.functions import overlap
+
+    docs = spark.read.parquet(f"{SF01}/documents.parquet")
+    whole = sorted(dedup.minhash_lsh_pairs(docs).collect())
+    for name in ("HIT_BLOCK", "PROBE_BLOCK"):
+        with monkeypatch.context() as m:
+            m.setattr(overlap, name, 4)
+            assert sorted(dedup.minhash_lsh_pairs(docs).collect()) == whole
+    assert whole
+
+
+def test_minhash_bucket_guard_counts_null_ids(spark):
+    """A bucket of exactly ``max_bucket + 1`` rows is dropped whether
+    one of them has a NULL id (it counts but never pairs) or none
+    does; one more allowed row keeps the pair."""
+    three = spark.createDataFrame(
+        [(1, BASE), (2, BASE), (None, BASE)], "doc_id long, text string"
+    )
+    assert dedup.minhash_lsh_pairs(three, max_bucket=2).collect() == []
+    kept = dedup.minhash_lsh_pairs(three, max_bucket=3).collect()
+    assert [(r.doc_a, r.doc_b, r.jaccard) for r in kept] == [(1, 2, 1.0)]
+    ids = spark.createDataFrame(
+        [(1, BASE), (2, BASE), (3, BASE)], "doc_id long, text string"
+    )
+    assert dedup.minhash_lsh_pairs(ids, max_bucket=2).collect() == []
+    assert len(dedup.minhash_lsh_pairs(ids, max_bucket=3).collect()) == 3
+
+
+def test_minhash_duplicate_ids_pair_every_feature_row(spark):
+    """A duplicate id gives one row per pair of its feature rows, as
+    the former join on doc id did (these rows are that plan's), and
+    NULL ids, NULL text and empty text keep their rules."""
+    rows = [
+        (1, BASE), (1, BASE.replace("rain", "snow")), (2, BASE),
+        (3, BASE.replace("cat", "dog")), (None, BASE),
+        (2, BASE.replace("warm", "cold")),
+        (4, "completely different text about spark shuffle partitions and joins"),
+        (4, None), (5, None), (6, ""), (7, "   "),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    assert sorted(tuple(r) for r in dedup.minhash_lsh_pairs(df).collect()) == [
+        (1, 2, 0.625, 104, 134, 0.7761194029850746),
+        (1, 2, 0.75, 112, 127, 0.8818897637795275),
+        (1, 2, 0.875, 111, 126, 0.8809523809523809),
+        (1, 2, 1.0, 119, 119, 1.0),
+        (1, 3, 0.6875, 105, 132, 0.7954545454545454),
+        (1, 3, 0.9375, 112, 124, 0.9032258064516129),
+        (2, 3, 0.8125, 104, 131, 0.7938931297709924),
+        (2, 3, 0.9375, 112, 124, 0.9032258064516129),
+        (6, 7, 1.0, 1, 1, 1.0),
+    ]
+
+
+def test_minhash_pairs_leave_no_cached_state(spark):
+    """The operator caches nothing: no persistent RDD and no tracked
+    frame outlives the call."""
+    from logzilla_spark.functions import caching
+
+    def rdd_ids():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    base, tracked = rdd_ids(), list(caching._TRACKED)
+    assert dedup.minhash_lsh_pairs(_docs(spark)).count() >= 1
+    assert rdd_ids() <= base
+    assert caching._TRACKED == tracked
+
+
 def _emb(spark):
     dim = 64
     e1 = [1.0] + [0.0] * (dim - 1)
@@ -302,21 +373,29 @@ def test_media_stats_and_stubs(spark):
 
 def test_minhash_pairs_plan_has_no_mandated_broadcast(spark):
     """At corpus scale the sig/shingle tables exceed any broadcast
-    threshold; simulate that by disabling broadcast and assert the plan
-    still builds (shuffle joins on doc id) with no BroadcastExchange —
-    i.e. nothing corpus-sized is ever *mandated* to broadcast."""
+    threshold; simulate that by disabling broadcast and assert the
+    asymmetric (delta vs corpus) plan still builds (shuffle joins on
+    doc id) with no BroadcastExchange — i.e. nothing corpus-sized is
+    ever *mandated* to broadcast."""
+
+    def pairs():
+        docs = _docs(spark)
+        return dedup.minhash_lsh_pairs_against(
+            docs.filter("doc_id IN (2, 4)"), docs.filter("doc_id NOT IN (2, 4)")
+        )
+
+    expected = {(r.doc_new, r.doc_old) for r in pairs().collect()}
+    assert expected
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     old_aqe = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", None)
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        df = dedup.minhash_lsh_pairs(_docs(spark))
+        df = pairs()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" not in plan, plan
         # and it still computes the same pairs
-        assert {(r.doc_a, r.doc_b) for r in df.collect()} == {
-            (r.doc_a, r.doc_b) for r in dedup.minhash_lsh_pairs(_docs(spark)).collect()
-        }
+        assert {(r.doc_new, r.doc_old) for r in df.collect()} == expected
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         if old_aqe is not None:
@@ -1320,9 +1399,9 @@ def test_url_curate_pre1970_order(spark, tmp_path):
 
 def test_release_operator_caches_frees_tracked_persists(spark):
     """Operators that return lazy plans over persisted internals
-    (minhash features, semdedup assignment, bpe/dsir occurrence
-    streams) register them; ``release_operator_caches`` frees them
-    (ADVICE r3 leak-by-default finding)."""
+    (semdedup assignment, bpe/dsir occurrence streams) register them;
+    ``release_operator_caches`` frees them (ADVICE r3 leak-by-default
+    finding)."""
     import time
 
     from logzilla_spark.functions import caching
@@ -1337,19 +1416,18 @@ def test_release_operator_caches_frees_tracked_persists(spark):
     # sizes, so concurrent drains cannot mask this test's additions)
     caching.release_operator_caches()
     base = rdd_ids()
-    df = _docs(spark)
-    pairs = dedup.minhash_lsh_pairs(df)
-    n = pairs.count()
+    emb = _emb(spark)
+    n = similarity.semdedup(emb, n_cells=2).count()
     added = rdd_ids() - base
-    assert added  # the feature persist registered and materialized
+    assert added  # the assignment persist registered and materialized
     assert n >= 1
     # a repeated call on the same input finds its plans cached:
     # no second registration, no second cache entry
     tracked = len(caching._TRACKED)
-    assert dedup.minhash_lsh_pairs(df).count() == n
+    assert similarity.semdedup(emb, n_cells=2).count() == n
     assert len(caching._TRACKED) == tracked
     assert rdd_ids() - base == added
-    # one release unpersists the feature table (async — poll briefly)
+    # one release unpersists the assignment (async — poll briefly)
     assert caching.release_operator_caches() == tracked
     for _ in range(50):
         if not (rdd_ids() & added):

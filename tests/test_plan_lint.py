@@ -91,6 +91,32 @@ def test_lineage_truncation_only_in_caching_module():
     assert hits == {"functions/caching.py"}, hits
 
 
+def test_scripts_take_core_count_from_session():
+    """Scripts size their session through ``get_spark()``, whose
+    ``session.DEFAULT_CPUS`` reads ``SPARK_GRAFT_CPUS``: a literal
+    ``cores=`` (or a second read of the variable) would run 32 tasks on
+    a 4-vCPU host whatever the host asks for. ``standalone_scaling.py``
+    varies cores on purpose."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(entrymod.__file__).parent / "scripts"
+    hits = []
+    for p in sorted(root.glob("*.py")):
+        if p.name == "standalone_scaling.py":
+            continue
+        tree = ast.parse(p.read_text())
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call) and getattr(node.func, "id", None) == "get_spark"):
+                continue
+            args = [*node.args[:1], *(k.value for k in node.keywords if k.arg == "cores")]
+            if any(isinstance(a, ast.Constant) for a in args):
+                hits.append(f"{p.name}:{node.lineno}")
+        if "SPARK_GRAFT_CPUS" in p.read_text():
+            hits.append(f"{p.name}: reads SPARK_GRAFT_CPUS")
+    assert not hits, hits
+
+
 def test_funnel_verdicts_exactly_two_corpus_scans(spark):
     """curation_funnel's stage-0-4 flags come from ONE corpus scan plus
     ONE bigram explode scan (round-3 verdict: the previous shape built

@@ -29,14 +29,8 @@ def test_repeated_curate_pass_compiles_nothing(spark):
     """A pass over the curate queries needs more classes (over 100 at
     sf0.01) than Spark's default 100-entry cache holds, so at that size
     every repeat recompiled part of it. With the engine's cache size a
-    repeated query whose generated code repeats compiles nothing.
-
-    ``q_dedup_clusters`` runs in each pass (its classes fill the cache)
-    but is not held to zero: ``minhash_lsh_pairs`` persists its feature
-    table (functions/caching.py), so the first pass computes it while
-    the second reads it back through an in-memory table scan, a plan
-    with its own generated classes (4 at sf0.01; 0 when the pass
-    releases the operator caches first, and 0 on a third pass).
+    repeated query whose generated code repeats compiles nothing, and
+    each of the three does: none reads a table an earlier pass cached.
     """
     import __spark_entry__
 
@@ -52,5 +46,4 @@ def test_repeated_curate_pass_compiles_nothing(spark):
 
     one_pass()
     again = one_pass()
-    assert again["q_dedup_ngram_jaccard"] == 0
-    assert again["q_dedup_embedding_cosine"] == 0
+    assert again == dict.fromkeys(CURATE, 0)
