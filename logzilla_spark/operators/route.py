@@ -35,6 +35,7 @@ def write_partitioned_tables(
     values: list[str],
     summary_for=None,
     cluster_by: list[str] | None = None,
+    overwrite: bool = False,
 ) -> dict[str, int]:
     """ONE ``partitionBy`` write fanning rows out to many tables.
 
@@ -46,14 +47,29 @@ def write_partitioned_tables(
     that survives 100 TB: N destination tables cost one shuffle-free
     write, not N jobs.
 
-    Returns {value: snapshot_id}. Values absent from the data still
-    get a (file-less) snapshot so the table exists.
+    Every table commits the writer's schema (``df.schema``), as
+    ``append``/``overwrite`` do, so its reads apply that schema, infer
+    none from footers, and present the columns in ``df``'s order with
+    ``partition_col`` filled from the directory.
+
+    Returns {value: snapshot_id}. Appending, values absent from the
+    data still get a (file-less) snapshot so the table exists; the
+    appended files stay in the shared staging directory.
+    ``overwrite=True`` instead replaces each table's content with its
+    directory's files, which the table takes over (they move into its
+    data dir, see ``LocalCatalog.overwrite_from_files``, so expiring
+    the snapshot deletes them); a value that got no rows is not
+    committed (no read can serve a table overwritten to no files) and
+    is absent from the result.
     """
     import glob
     import os
+    import shutil
     import uuid as _uuid
 
     staging = os.path.join(catalog.warehouse, "_routed", _uuid.uuid4().hex)
+    schema_json = df.schema.json()
+    commit = catalog.overwrite_from_files if overwrite else catalog.append_external
     if cluster_by:
         # opt-in data clustering (the MergeTree ORDER BY / Iceberg
         # write.sort-order analog — see LocalCatalog._stage_write):
@@ -72,11 +88,39 @@ def write_partitioned_tables(
         files = sorted(
             glob.glob(os.path.join(staging, f"{partition_col}={v}", "*.parquet"))
         )
+        if overwrite and not files:
+            continue
         summary = summary_for(v) if summary_for else {}
-        snaps[v] = catalog.append_external(
-            table_for(v), files, base_path=staging, summary=summary
+        snaps[v] = commit(
+            table_for(v), files, base_path=staging, summary=summary,
+            schema_json=schema_json,
         )
+    if overwrite:
+        shutil.rmtree(staging, ignore_errors=True)  # markers + empty dirs
     return snaps
+
+
+def category_last(records: DataFrame) -> DataFrame:
+    """The sink column order: ``category`` last, where a read of the
+    ``partitionBy`` directories has always put it. The sinks commit the
+    writer's schema, so the writer's frame fixes their read order."""
+    return records.select(
+        *[c for c in records.columns if c != "category"], "category"
+    )
+
+
+def sinks_with_files(
+    catalog: LocalCatalog, categories: list[str] | None = None
+) -> list[str]:
+    """The categories whose sink's head snapshot holds data files (a
+    category that saw no rows yet has none, or no sink at all)."""
+    out = []
+    for c in categories or CATEGORIES:
+        name = sink_name(c)
+        sid = catalog.last_snapshot_id(name)
+        if sid is not None and any(g["files"] for g in catalog._groups(name, sid)):
+            out.append(c)
+    return out
 
 
 def route_to_sinks_single_pass(
@@ -94,7 +138,7 @@ def route_to_sinks_single_pass(
     exchange; see write_partitioned_tables)."""
     categories = categories or CATEGORIES
     return write_partitioned_tables(
-        records,
+        category_last(records),
         catalog,
         "category",
         sink_name,
@@ -106,24 +150,37 @@ def route_to_sinks_single_pass(
     )
 
 
-def read_all_sinks(
-    spark: SparkSession, catalog: LocalCatalog, categories: list[str] | None = None
-) -> DataFrame:
-    """Union of every sink table (for the set-equality invariant)."""
-    from ..sources.catalog import SnapshotError
+def read_routed(
+    spark: SparkSession, catalog: LocalCatalog, snaps: dict[str, int]
+) -> DataFrame | None:
+    """The rows one routing write committed (``snaps`` as
+    ``route_to_sinks_single_pass`` returned it, or a subset): each sink
+    snapshot's newest append group, under the schema the write
+    recorded on every sink. None when those sinks got no rows."""
+    sinks = [(sink_name(c), sid) for c, sid in snaps.items()]
+    groups = [catalog._groups(t, sid)[-1] for t, sid in sinks]
+    if not any(g["files"] for g in groups):
+        return None
+    return catalog._read_groups(spark, groups, catalog._schema_json_at(*sinks[0]))
 
-    categories = categories or CATEGORIES
-    dfs = []
-    for c in categories:
-        if not catalog.exists(sink_name(c)):
-            continue
-        try:
-            dfs.append(catalog.read(spark, sink_name(c)))
-        except SnapshotError:
-            continue  # committed but empty (category saw no rows)
+
+def read_sinks(
+    spark: SparkSession, catalog: LocalCatalog, categories: list[str]
+) -> DataFrame:
+    """Union of the sinks of ``categories``, each holding rows (see
+    ``sinks_with_files``): one scan per sink."""
+    dfs = [catalog.read(spark, sink_name(c)) for c in categories]
     if not dfs:
         raise ValueError("no sinks committed")
     out = dfs[0]
     for df in dfs[1:]:
         out = out.unionByName(df)
     return out
+
+
+def read_all_sinks(
+    spark: SparkSession, catalog: LocalCatalog, categories: list[str] | None = None
+) -> DataFrame:
+    """Union of every sink table that holds rows (for the
+    set-equality invariant): one scan per sink."""
+    return read_sinks(spark, catalog, sinks_with_files(catalog, categories))

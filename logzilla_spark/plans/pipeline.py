@@ -23,6 +23,23 @@ to exactly-once over snapshot-committed tables (SURVEY.md §2.5 G6/G7):
 At cluster scale the same protocol runs over real Iceberg: incremental
 scan between snapshot ids, commit summaries as snapshot properties,
 table rollback via ``rollback_to_snapshot``.
+
+A run launches only the Spark jobs that move data (6 for a delta with
+dims committed, no quota):
+
+- one broadcast per dim table for the enrich joins;
+- the routing write (parse + enrich execute inside it);
+- the aggregate: one shuffle stage and one ``partitionBy(category)``
+  write of ``windowed_counts`` over every sink, whose directories move
+  into the ``agg_<c>`` tables' data dirs and are committed
+  metadata-only (so expiring an ``agg_<c>`` snapshot deletes its
+  files);
+- the metrics append, its rows handed to the JVM as Arrow (no Python
+  worker).
+
+Everything else is metadata: every table read applies its committed
+schema (no footer inference), and ``rows_in`` and the per-partition
+route lineage come from parquet footers.
 """
 
 from __future__ import annotations
@@ -34,13 +51,21 @@ import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregate import windowed_counts
 from ..operators.enrich import enrich_records
 from ..operators.parse import parse_records
-from ..operators.route import route_to_sinks_single_pass, sink_name
+from ..operators.route import (
+    read_routed,
+    read_sinks,
+    route_to_sinks_single_pass,
+    sink_name,
+    sinks_with_files,
+    write_partitioned_tables,
+)
 from ..schemas import CATEGORIES
 from ..sources.catalog import LocalCatalog
 
@@ -88,6 +113,12 @@ class RunReport:
 _PART_RE = re.compile(r"part-(\d+)")
 
 
+def _footer_rows(path: str) -> int:
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.num_rows
+
+
 def _routed_lineage_rows(
     cat: LocalCatalog, snaps: dict[str, int], run_id: str, snap: int
 ) -> tuple[list[tuple], dict[str, int]]:
@@ -98,8 +129,6 @@ def _routed_lineage_rows(
     per-sink lineage — zero extra Spark jobs. Returns (metric rows,
     rows routed per category).
     """
-    import pyarrow.parquet as pq
-
     rows: list[tuple] = []
     routed: dict[str, int] = {}
     for c, sid in snaps.items():
@@ -107,7 +136,7 @@ def _routed_lineage_rows(
         new = groups[-1]  # the group this run appended
         total = 0
         for f in new["files"]:
-            n = pq.ParquetFile(f).metadata.num_rows
+            n = _footer_rows(f)
             m = _PART_RE.search(os.path.basename(f))
             pid = int(m.group(1)) if m else -1
             rows.append((run_id, f"route_{c}", pid, None, n, snap))
@@ -193,15 +222,12 @@ class Pipeline:
 
         key = self.quota.get("key", "source")
         window = self.quota.get("window", "hour")
-        files = [
-            f
-            for c, sid in snaps.items()
-            if c != "throttled"
-            for f in self.cat._groups(sink_name(c), sid)[-1]["files"]
-        ]
-        if not files:
+        admitted = read_routed(
+            self.spark, self.cat,
+            {c: sid for c, sid in snaps.items() if c != "throttled"},
+        )
+        if admitted is None:
             return
-        admitted = self.spark.read.parquet(*files)
         delta = (
             admitted.select(
                 F.col(key).cast("string").alias("key"),
@@ -285,23 +311,33 @@ class Pipeline:
             summary_extra={"input_snapshot_id": head},
         )
         lineage_rows, routed = _routed_lineage_rows(self.cat, snaps, run_id, head)
-        rows_in = delta.count()
+        rows_in = sum(
+            _footer_rows(f)
+            for g in self.cat.incremental_groups(PAGES_TABLE, ckpt, head)
+            for f in g["files"]
+        )
         if fail_after_stage == "route":
             raise RuntimeError("injected failure after route")
 
         if self.quota is not None:
             self._commit_quota_spend(snaps, tag)
 
-        # aggregates reflect TOTAL sink state -> overwrite (idempotent)
-        from ..sources.catalog import SnapshotError
-
-        for c in self.categories:
-            try:
-                sink = self.cat.read(self.spark, sink_name(c))
-            except SnapshotError:
-                continue  # category saw no rows yet
-            agg = windowed_counts(sink)
-            self.cat.overwrite(agg, f"agg_{c}", summary=dict(tag))
+        # aggregates reflect TOTAL sink state -> overwrite (idempotent):
+        # one aggregate over every sink that holds rows, written once
+        # partitioned by category; each agg_<c> commits its directory
+        # metadata-only, with windowed_counts' schema (and column order)
+        present = sinks_with_files(self.cat, self.categories)
+        if present:
+            agg = windowed_counts(read_sinks(self.spark, self.cat, present))
+            written = write_partitioned_tables(
+                agg, self.cat, "category", lambda c: f"agg_{c}", present,
+                summary_for=lambda c: dict(tag), overwrite=True,
+            )
+            # a sink whose rows all lack warc_ts has no window: its
+            # agg table is one empty file, as a plain overwrite writes
+            for c in present:
+                if c not in written:
+                    self.cat.overwrite(agg.limit(0), f"agg_{c}", summary=dict(tag))
         if fail_after_stage == "aggregate":
             raise RuntimeError("injected failure after aggregate")
 
@@ -310,8 +346,10 @@ class Pipeline:
         # that into a literal inside the generated Java, so every run
         # would compile new classes for the same plan
         committed_at = datetime.now(timezone.utc)
+        # pandas -> Arrow -> JVM (columns by position): no Python
+        # worker task decodes the rows
         metrics = self.spark.createDataFrame(
-            [r + (committed_at,) for r in lineage_rows],
+            pd.DataFrame([r + (committed_at,) for r in lineage_rows]),
             schema="run_id string, stage string, partition_id int, rows_in bigint, "
                    "rows_out bigint, input_snapshot_id bigint, committed_at timestamp",
         )

@@ -264,6 +264,58 @@ def _partition_dir_columns(files: list[str]) -> list[str]:
     return []
 
 
+def _col(name: str):
+    """A top-level column by its literal name (dots are not nesting)."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _shared_partition_dirs(groups: list[dict]) -> dict[str, str] | None:
+    """The ``k=v`` directories every file of ``groups`` sits under below
+    its group's base, as {k: v} ({} when there are none). None when the
+    files differ in them, when a directory name is one Spark would
+    decode (a ``%`` escape, the NULL/empty ``__HIVE_DEFAULT_PARTITION__``)
+    or is not a plain ``dir/.../k=v/.../file`` path under the base: for
+    those only Spark's own partition discovery gives the right values."""
+    shared = None
+    for g in groups:
+        for f in g["files"]:
+            rel = os.path.relpath(os.path.dirname(f), g["base"])
+            if rel == os.pardir or rel.startswith(os.pardir + os.sep):
+                return None
+            kv: list[tuple[str, str]] = []
+            for seg in ([] if rel == os.curdir else rel.split(os.sep)):
+                if "=" in seg:
+                    kv.append(tuple(seg.split("=", 1)))
+                elif kv:
+                    return None  # a plain directory below a k=v one
+            for k, v in kv:
+                if not k or not v or "%" in k + v or v == "__HIVE_DEFAULT_PARTITION__":
+                    return None
+            if len({k for k, _ in kv}) != len(kv):
+                return None
+            if shared is None:
+                shared = kv
+            elif kv != shared:
+                return None
+    return dict(shared or [])
+
+
+def _parquet_scans(spark: SparkSession, reader, files: list[str]) -> DataFrame:
+    """``reader.parquet`` over ``files`` as unioned scans of at most
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` files
+    each: Spark lists the files of a larger scan with a distributed
+    job, on every read of it. Union by position: every scan shares
+    ``reader``'s schema."""
+    per = max(1, int(spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    )))
+    out = None
+    for i in range(0, len(files), per):
+        df = reader.parquet(*files[i:i + per])
+        out = df if out is None else out.union(df)
+    return out
+
+
 class LocalCatalog:
     def __init__(self, warehouse: str):
         self.warehouse = os.path.abspath(warehouse)
@@ -394,8 +446,8 @@ class LocalCatalog:
             # the table's CURRENT schema (reads apply it to every data
             # file — older files fill added columns with NULL, extra
             # columns in them are ignored). Operations without a
-            # DataFrame (rollback, external append) carry the
-            # predecessor's schema forward via _current_schema_json.
+            # DataFrame (rollback, an external append given no schema)
+            # carry the predecessor's schema forward via _schema_json_at.
             if schema_json is not None:
                 manifest["schema"] = schema_json
             tmp = os.path.join(snap_dir, f".tmp-{uuid.uuid4().hex}.json")
@@ -528,19 +580,54 @@ class LocalCatalog:
         files: list[str],
         base_path: str,
         summary: dict | None = None,
+        schema_json: str | None = None,
     ) -> int:
         """Append already-written parquet files (e.g. one category's
         directory out of a single ``partitionBy`` staging write) without
         rewriting them — the Iceberg add_files / metadata-only append.
         ``base_path`` is the staging root, so partition-dir columns
-        (``category=<c>``) are recovered at read time."""
+        (``category=<c>``) are recovered at read time. ``schema_json``
+        is the writer's schema (``df.schema.json()``, partition columns
+        included), recorded as ``append`` records it; without it the
+        predecessor's schema carries forward."""
         with _COMMIT_LOCK:  # prev-groups read + commit: one RMW (see append)
             prev = self.last_snapshot_id(name)
             prev_groups = self._groups(name, prev) if prev else []
             groups = prev_groups + [{"base": base_path, "files": sorted(files)}]
             sid = self._commit(
                 name, groups, "append", summary or {},
-                schema_json=self._schema_json_at(name, prev),
+                schema_json=schema_json or self._schema_json_at(name, prev),
+            )
+            _invalidate_partitioned_cache(self.warehouse, name)  # after publish (see append)
+            return sid
+
+    def overwrite_from_files(
+        self,
+        name: str,
+        files: list[str],
+        base_path: str,
+        summary: dict | None = None,
+        schema_json: str | None = None,
+    ) -> int:
+        """Replace the table's content with already-written parquet
+        files (same arguments as :meth:`append_external`) without
+        rewriting them. Unlike ``append_external`` the table takes the
+        files over: each moves (a rename) to the same path below a new
+        directory of the table's data dir, so once a later snapshot
+        supersedes them ``expire_snapshots`` deletes them, and a crash
+        before the commit leaves orphans ``remove_orphan_files``
+        reclaims."""
+        root = os.path.join(self._data_dir(name), uuid.uuid4().hex)
+        moved = []
+        for f in sorted(files):
+            dst = os.path.join(root, os.path.relpath(f, base_path))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(f, dst)
+            moved.append(dst)
+        with _COMMIT_LOCK:
+            sid = self._commit(
+                name, [{"base": root, "files": moved}],
+                "overwrite", summary or {}, schema_json=schema_json,
             )
             _invalidate_partitioned_cache(self.warehouse, name)  # after publish (see append)
             return sid
@@ -1541,26 +1628,61 @@ class LocalCatalog:
         groups: list[dict],
         schema_json: str | None = None,
     ) -> DataFrame:
-        # one read per basePath group (partition-dir columns recovered
-        # relative to that base), then union. When the snapshot recorded
-        # a schema, reads apply it EXPLICITLY (Iceberg-style schema
-        # evolution): files from before an added column fill it with
-        # NULL, files carrying a since-dropped column ignore it, and no
-        # footer sampling/inference runs at plan time — the manifest is
-        # the source of truth. Legacy manifests (no schema) keep the
-        # inference path.
+        """One frame over ``groups``' files.
+
+        When the snapshot recorded a schema, reads apply it EXPLICITLY
+        (Iceberg-style schema evolution): files from before an added
+        column fill it with NULL, files carrying a since-dropped column
+        ignore it, no footer sampling/inference runs at plan time (no
+        Spark job) — the manifest is the source of truth — and the
+        columns come in the schema's order.
+
+        With a schema, and every file under the same ``k=v`` partition
+        directories below its group's base (or under none), all groups
+        are ONE ``spark.read.schema(...).parquet(*files)`` scan and the
+        directory values are literal columns (never NULL, so their
+        fields read as non-nullable). A scan given a schema takes at
+        most ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+        files; more are cut into unioned scans of that many (see
+        ``_parquet_scans``), so no read launches a job. Otherwise — a snapshot
+        that mixes partition values, a value Spark escapes or writes for
+        NULL, a directory key the schema lacks, or a legacy manifest
+        with no schema (the inference path) — each group is its own scan
+        with its own basePath (partition-dir columns recovered relative
+        to that base), and the scans are unioned; a column the schema
+        lacks comes after the schema's columns.
+        """
+        from pyspark.sql.types import StructType
+
         schema = _explicit_schema(schema_json)
+        groups = [g for g in groups if g["files"]]
+        if not groups:
+            raise SnapshotError("snapshot has no data files")
+        parts = _shared_partition_dirs(groups) if schema is not None else None
+        if parts is not None and set(parts) <= set(schema.names):
+            data = StructType([f for f in schema if f.name not in parts])
+            df = _parquet_scans(
+                spark, spark.read.schema(data),
+                [f for g in groups for f in g["files"]],
+            )
+            return df.select(*[
+                F.lit(parts[f.name]).cast(f.dataType).alias(f.name, metadata=f.metadata)
+                if f.name in parts else _col(f.name)
+                for f in schema
+            ])
         out = None
         for g in groups:
-            if not g["files"]:
-                continue
-            reader = spark.read
-            if schema is not None:
-                reader = reader.schema(schema)
-            df = reader.option("basePath", g["base"]).parquet(*g["files"])
+            reader = spark.read.option("basePath", g["base"])
+            if schema is None:
+                df = reader.parquet(*g["files"])
+            else:
+                df = _parquet_scans(spark, reader.schema(schema), g["files"])
             out = df if out is None else out.unionByName(df)
-        if out is None:
-            raise SnapshotError("snapshot has no data files")
+        if schema is not None:
+            out = out.select(*[
+                _col(c) for c in
+                schema.names + [c for c in out.columns if c not in schema.names]
+            ])
         return out
 
     def read(self, spark: SparkSession, name: str, snapshot_id: int | None = None) -> DataFrame:
@@ -1581,8 +1703,23 @@ class LocalCatalog:
         Returns None when there is nothing new.
         """
         head = self.last_snapshot_id(name)
-        if head is None or head == after_snapshot_id:
+        new_groups = self.incremental_groups(name, after_snapshot_id, head)
+        if not new_groups:
             return None
+        return self._read_groups(
+            spark, new_groups, self._schema_json_at(name, head)
+        )
+
+    def incremental_groups(
+        self, name: str, after_snapshot_id: int | None, head: int | None = None
+    ) -> list[dict]:
+        """Snapshot ``head``'s file groups (None = the table's head)
+        minus every file ``after_snapshot_id`` held (None = everything):
+        what ``read_incremental`` scans, as metadata. Empty when there is
+        nothing new."""
+        head = head if head is not None else self.last_snapshot_id(name)
+        if head is None or head == after_snapshot_id:
+            return []
         seen: set[str] = set()
         if after_snapshot_id:
             for g in self._groups(name, after_snapshot_id):
@@ -1591,11 +1728,7 @@ class LocalCatalog:
             {"base": g["base"], "files": [f for f in g["files"] if f not in seen]}
             for g in self._groups(name, head)
         ]
-        if not any(g["files"] for g in new_groups):
-            return None
-        return self._read_groups(
-            spark, new_groups, self._schema_json_at(name, head)
-        )
+        return new_groups if any(g["files"] for g in new_groups) else []
 
     def changes_between(
         self,

@@ -179,7 +179,7 @@ def route_batch(
     """
     import pyarrow.parquet as pq
 
-    from ..operators.route import sink_name, write_partitioned_tables
+    from ..operators.route import category_last, sink_name, write_partitioned_tables
 
     cats = list(categories) if categories is not None else list(CATEGORIES)
     committed = {c: _committed_map(cat, sink_name(c)) for c in cats}
@@ -188,7 +188,7 @@ def route_batch(
     if not pending:
         return routed  # fully replayed epoch
     snaps = write_partitioned_tables(
-        batch, cat, "category", sink_name, pending,
+        category_last(batch), cat, "category", sink_name, pending,
         summary_for=lambda c: _summary_at_publish(
             cat, sink_name(c), query_id, batch_id
         ),
