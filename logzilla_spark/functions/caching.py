@@ -17,8 +17,8 @@ one release point, chosen by the operator's shape:
   and ``unpersist()`` in ``finally``: every consumer has run by the
   time they return. Lazy-plan operators they compose keep their own
   policy (below).
-- **Operators that return lazy plans** (semdedup, bpe_apply,
-  dsir_scores, minhash_lsh_pairs_against, ...) use :func:`persist_tracked`. The plan
+- **Operators that return lazy plans** (bpe_apply, dsir_scores,
+  minhash_lsh_pairs_against, ...) use :func:`persist_tracked`. The plan
   they return consumes the persisted table 2-4 times, and Spark
   recomputes unpersisted lineage once per consumer (ReuseExchange does
   not fire across DeduplicateRelations' clones). They cannot unpersist

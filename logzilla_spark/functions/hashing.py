@@ -49,8 +49,8 @@ def minhash_coeffs(n_hashes: int) -> tuple[list[int], list[int]]:
 def hyperplanes(n_planes: int, dim: int) -> list[list[int]]:
     """Deterministic ±1 random-hyperplane matrix for sign-LSH (Charikar '02).
 
-    Derived from md5 parity in Python and inlined as literals into both
-    the Spark plan and the DuckDB oracle SQL.
+    Derived from md5 parity in Python; both the Arrow bucket pass and
+    the DuckDB oracle SQL's literals use this matrix.
     """
     return [
         [1 if _md5_int(f"hp-{j}-{d}") % 2 == 0 else -1 for d in range(dim)]

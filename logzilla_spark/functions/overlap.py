@@ -9,6 +9,9 @@ both run here as one ``mapInArrow`` stage with no candidate rows:
   document's (band, band hash) buckets, and a pair sharing one is
   verified by signature agreement and exact shingle intersection.
 
+The postings and the task dealing also serve ``vectors.keyed_pairs``
+(LSH near-dup, SemDeDup): each vector is a document of one element.
+
 The driver collects the frame once with ``toArrow()``, encodes the
 elements to exact int ids (no hashing, so no collision caveat) and
 builds the inverted index as postings sorted by (element, document).
@@ -29,11 +32,12 @@ Catalyst expressions (``dedup._est_expr``) and the DuckDB twins'
 (``oracle_dataops``), so the values and the ``>=`` tests are
 bit-identical.
 
-Size assumption: the collected frame fits the driver — the sf1
+Size assumption: the collected frame fits the driver and rides in
+every task's closure (Spark broadcasts a closure over 1 MB) — the sf1
 documents corpus has ~2.6M (document, gram) postings and at most
 ~15M (document, shingle hash) entries (120 MB as int64 probe keys,
 which every task holds), collected once as the cosine matrix is in
-``vectors.py``.
+``vectors.py``; the keyed cosine sites hold one posting per vector.
 """
 
 from __future__ import annotations

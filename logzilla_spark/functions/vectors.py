@@ -1,35 +1,40 @@
-"""Pinned-order cosine and L2 as blocked Arrow kernels.
+"""Pinned-order cosine and L2 as blocked Arrow kernels: every cosine and
+squared L2 the engine takes over embeddings runs here, in three shapes.
 
-Exact cosine near-dup (``dedup.embedding_neardup_pairs``) and brute-force
-top-k (``similarity.cosine_topk``) score blocks of rows against a whole
-right-hand side. Both run here as one ``mapInArrow`` stage: the driver
-collects the right-hand side once with ``toArrow()`` (the side the
-nested-loop join used to broadcast, so the size assumption is
-unchanged), sorted by id and cut into tiles, and a task scores blocks
-of rows against every tile, at most :data:`PAIR_BLOCK` pairs at a time,
-applying the threshold or the per-probe partial top-k inside the block.
-Top-k blocks come from the corpus's Arrow batches; near-dup pairs the
-matrix with itself, so its blocks are slices of the matrix.
+- **Against a collected right-hand side**: exact near-dup
+  (``dedup.embedding_neardup_pairs``) pairs the matrix with itself and
+  brute-force top-k (``similarity.cosine_topk``) streams the corpus
+  against the probes; tiles of rows are scored at most
+  :data:`PAIR_BLOCK` pairs at a time, with the threshold or a per-probe
+  partial top-k applied in the block.
+- **Pairs that share a key** (a sign-LSH bucket or an IVF cell):
+  :func:`keyed_pairs` expands each key's rows of a collected frame on
+  ``functions.overlap``'s postings (LSH near-dup, SemDeDup), and
+  :func:`keyed_cosines` streams the corpus against the probes' key
+  lists (LSH and IVF top-k). Both gather each pair's columns
+  (:func:`_pair_cosines`).
+- **Nearest centroid** (:func:`nearest_centroids`): IVF assignment and
+  probing, PQ codes and lookup tables and both k-means loops
+  (:func:`lloyd`), squared L2 as ``acc + (a - b) * (a - b)``.
 
-Bits. The semantic definition stays the sequential fold of
-``dedup.dot_expr`` and its DuckDB twin: products of float->double
-casts summed left to right from a ``0.0`` seed. Each dot here is the
-column loop ``acc = acc + a[:, i] * b[:, i]`` over a block of pairs:
-the same IEEE-754 operations in the same order for every pair (numpy
-neither reassociates an elementwise add nor fuses a multiply-add; only
-BLAS ``matmul`` would), so the doubles are bit-identical. Self-dots use
-the same loop, and ``dot / sqrt(da * db)`` with a zero divisor is NULL
-as Spark's ``try_divide`` and DuckDB's ``x / 0`` are.
+Size assumption: what is collected fits the driver and rides in every
+task's closure: a right-hand side (the side a broadcast join would
+ship), the probes and centroids, and a self-pair site's whole keyed
+frame (the sf1-scale corpus is 20k x 64 floats, 10 MB as float64).
+
+Bits. The definition is the sequential fold of ``dedup.dot_expr`` and
+its DuckDB twin: products of float->double casts summed left to right
+from a ``0.0`` seed. Each dot here is the column loop ``acc = acc +
+a[:, i] * b[:, i]`` over a block of pairs, or its gather form ``acc =
+acc + a[i][ia] * b[i][ib]``: the same IEEE-754 operations in the same
+order (numpy neither reassociates an elementwise add nor fuses a
+multiply-add; only BLAS ``matmul`` would), so the doubles are
+bit-identical. ``dot / sqrt(da * db)`` with a zero divisor is NULL, as
+Spark's ``try_divide`` and DuckDB's ``x / 0`` are.
 
 NULLs, as in the fold: a NULL array, a NULL element or a width mismatch
 makes the cosine NULL. Vectors are grouped by width and a pair is only
-computed inside one group. A NULL id never pairs (``<`` and ``!=`` on
-NULL are NULL).
-
-Nearest centroid (:func:`nearest_centroids`): IVF cell assignment and
-probing, PQ encoding and both k-means loops (:func:`lloyd`) score row
-blocks against a small driver-held centroid matrix with the same
-groups and column loops (squared L2 as ``acc + (a - b) * (a - b)``).
+computed inside one group. A NULL id never pairs.
 """
 
 from __future__ import annotations
@@ -40,7 +45,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType, StructField, StructType
+
+from logzilla_spark.functions.overlap import _deal, _Postings
 
 # Most pairs one block scores: a float64 block is 256 KiB, so the
 # accumulator and its product temporary stay cache-resident, and an
@@ -255,6 +262,148 @@ def cosine_topk_partial(stream: DataFrame, probes: DataFrame, k: int) -> DataFra
     return stream.mapInArrow(kernel, schema)
 
 
+def _sign_bits(vecs: pa.Array, planes: list[list[int]]) -> np.ndarray:
+    """Sign-LSH buckets: bit j set iff the dot with the ±1 plane j, the
+    chain ``0.0 ± v[0] ± v[1] ...`` (``p * -1.0`` is ``-p`` exactly, and
+    ``a - b`` is ``a + (-b)``), is >= 0, NaN included (the largest
+    double in Spark and DuckDB); 0 for a vector not exactly as wide as
+    the planes or holding a NULL, whose dots are NULL."""
+    out = np.zeros(len(vecs), np.int64)
+    group = _groups(vecs).get(len(planes[0]) if planes else -1)
+    if group is not None:
+        pos, cols, _ = group
+        with np.errstate(all="ignore"):
+            for j, plane in enumerate(planes):
+                acc = np.zeros(len(pos))
+                for col, sign in zip(cols, plane):
+                    acc = acc + col if sign > 0 else acc - col
+                out[pos] |= np.where((acc >= 0) | np.isnan(acc), 1 << j, 0)
+    return out
+
+
+def sign_buckets(vecs: DataFrame, planes: list[list[int]]) -> DataFrame:
+    """The (id, vector) frame with a ``bucket`` column: :func:`_sign_bits`
+    of each Arrow batch, no shuffle."""
+    schema = StructType(vecs.schema.fields + [StructField("bucket", LongType(), False)])
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            bucket = pa.array(_sign_bits(b.column(1), planes))
+            yield pa.RecordBatch.from_arrays([*b.columns, bucket], names=schema.fieldNames())
+
+    return vecs.mapInArrow(kernel, schema)
+
+
+def _index(vecs: pa.Array) -> tuple[np.ndarray, np.ndarray, dict]:
+    """:func:`_groups` with each row's width (-1 for no group) and its
+    column in that width's group."""
+    groups = _groups(vecs)
+    width, col = np.full(len(vecs), -1), np.zeros(len(vecs), int)
+    for w, (pos, _, _) in groups.items():
+        width[pos], col[pos] = w, np.arange(len(pos))
+    return width, col, groups
+
+
+def _pair_cosines(a: tuple, ra: np.ndarray, b: tuple, rb: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(cosine, is_null) of rows ``ra`` of :func:`_index` ``a`` against
+    rows ``rb`` of ``b``, NULL unless both rows are in one width group:
+    :func:`_cosine`'s loop, gathered, ``acc = acc + a[i][ia] * b[i][ib]``."""
+    (wa, ca, ga), (wb, cb, gb) = a, b
+    cos, null = np.zeros(len(ra)), np.ones(len(ra), dtype=bool)
+    w = np.where(wa[ra] == wb[rb], wa[ra], -1)
+    with np.errstate(all="ignore"):
+        for width in np.unique(w[w >= 0]):
+            at = np.flatnonzero(w == width)
+            (_, acols, adots), (_, bcols, bdots) = ga[width], gb[width]
+            ia, ib, acc = ca[ra[at]], cb[rb[at]], np.zeros(len(at))
+            for ac, bc in zip(acols, bcols):
+                acc = acc + ac[ia] * bc[ib]
+            den = np.sqrt(adots[ia] * bdots[ib])
+            null[at] = den == 0
+            cos[at] = acc / np.where(null[at], 1.0, den)
+    return cos, null
+
+
+def keyed_pairs(
+    spark, t: pa.Table, threshold: float, max_df: int | None, emit, schema: StructType
+) -> DataFrame:
+    """``emit``'s batches of ``schema`` over the pairs of rows of the
+    collected (id, vector, key, ...) table that share a non-NULL key,
+    have different ids and a cosine >= ``threshold`` (NaN passes, NULL
+    drops). Rows sorted by id are ``overlap._Postings`` documents, so a
+    pair (a, b) has the lower id at a, and a key held by more than
+    ``max_df`` rows pairs nothing (NULL-id rows count, but never pair).
+    Per block of rows, ``emit(cols, a, b, cosine)`` gets the sorted
+    columns without the vector and the passing pairs' positions and
+    cosines."""
+    block = PAIR_BLOCK
+    cols = [c.combine_chunks() for c in t.take(pc.sort_indices(t.column(0))).columns]
+    index = _index(cols.pop(1))
+    n_ids = len(t) - cols[0].null_count
+    ids = cols[0].slice(0, n_ids).to_numpy(zero_copy_only=False)
+    doc = np.where(np.arange(len(t)) < n_ids, np.arange(len(t)), -1)
+    row = np.flatnonzero(cols[1].is_valid().to_numpy(zero_copy_only=False))
+    _, elem = np.unique(cols[1].take(row).to_numpy(), return_inverse=True)
+    postings = _Postings(elem, row, doc, n_ids, max_df)
+
+    def score(lo: int, hi: int) -> pa.RecordBatch | None:
+        a, b = postings.partners(lo, hi)
+        a = a + lo
+        parts = [_pair_cosines(index, a[s : s + block], index, b[s : s + block])
+                 for s in range(0, len(a), block)]
+        if not parts:
+            return None
+        cos, null = map(np.concatenate, zip(*parts))
+        ok = ~null & ((cos >= threshold) | np.isnan(cos)) & (ids[a] != ids[b])
+        return emit(cols, a[ok], b[ok], cos[ok]) if ok.any() else None
+
+    return _deal(spark, postings.blocks(), score, schema)
+
+
+def keyed_cosines(stream: DataFrame, probes: DataFrame) -> DataFrame:
+    """(stream id, probe id, cosine), named as the id columns, for every
+    pair of rows of the streamed and the probe (id, vector, key) frames
+    with equal keys and different ids; NULL cosines are kept. The probes
+    are collected sorted by key, one row per probe key; each Arrow batch
+    of the stream is cut into runs of rows that meet at most
+    :data:`PAIR_BLOCK` probe rows (plus one row's own)."""
+    block = PAIR_BLOCK
+    stream, probes = (
+        df.where(df[df.columns[0]].isNotNull() & df[df.columns[2]].isNotNull())
+        for df in (stream, probes)
+    )
+    t = probes.toArrow()
+    pids, pvecs, pkeys = (c.combine_chunks() for c in t.take(pc.sort_indices(t.column(2))).columns)
+    pkeys, pindex = pkeys.to_numpy(), _index(pvecs)
+    schema = _schema(stream.schema.fields[0], probes.schema.fields[0])
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            keys = batch.column(2).to_numpy()
+            lo = np.searchsorted(pkeys, keys)
+            n = np.searchsorted(pkeys, keys, side="right") - lo
+            if not n.any():
+                continue
+            sids, index = batch.column(0), _index(batch.column(1))
+            run = np.cumsum(n)
+            cuts = np.unique(np.concatenate(
+                ([0, len(n)], np.searchsorted(run, np.arange(block, run[-1], block)) + 1)
+            ))
+            for r0, r1 in zip(cuts[:-1], cuts[1:]):
+                m = n[r0:r1]
+                rs = np.repeat(np.arange(r0, r1), m)
+                rp = np.repeat(lo[r0:r1] - (np.cumsum(m) - m), m) + np.arange(m.sum())
+                keep = pc.not_equal(sids.take(rs), pids.take(rp)).to_numpy(zero_copy_only=False)
+                rs, rp = rs[keep], rp[keep]
+                cos, null = _pair_cosines(index, rs, pindex, rp)
+                yield pa.RecordBatch.from_arrays(
+                    [sids.take(rs), pids.take(rp), pa.array(cos, pa.float64(), mask=null)],
+                    names=schema.fieldNames(),
+                )
+
+    return stream.mapInArrow(kernel, schema)
+
+
 # Fixed-point k-means means (:func:`lloyd`): components quantize to
 # floor(v * 2^24) BIGINTs, so a mean is a pure function of exact,
 # order-independent integer sums — bit-portable to the DuckDB twin.
@@ -369,6 +518,26 @@ def nearest_codes(vecs: DataFrame, codebooks: DataFrame, dsub: int) -> DataFrame
                 [block.column(0), pa.ListArray.from_arrays(offsets, codes.ravel())],
                 names=schema.fieldNames(),
             )
+
+    return nearest_centroids(vecs, books, dsub, emit, schema)
+
+
+def code_distances(vecs: DataFrame, codebooks: DataFrame, dsub: int) -> DataFrame:
+    """(id, luts): per sub of the (sub, code, codeword) frame, in sub
+    order, the squared L2 from the row's slice to every codeword in code
+    order; NULL where the fold is (a NULL slice or element, a width
+    mismatch)."""
+    books = _books(codebooks, dsub)
+    schema = StructType([vecs.schema.fields[0], StructField("luts", ArrayType(ArrayType(DoubleType())))])
+
+    def emit(blocks):
+        for block, ranked in blocks:
+            _, _, dist, null = zip(*ranked.values())
+            ks = [d.shape[1] for d in dist]
+            flat = pa.array(np.hstack(dist).ravel(), pa.float64(), mask=np.hstack(null).ravel())
+            lut = pa.ListArray.from_arrays(np.cumsum([0] + ks * block.num_rows, dtype=np.int32), flat)
+            subs = pa.ListArray.from_arrays(np.arange(0, len(lut) + 1, len(ks), dtype=np.int32), lut)
+            yield pa.RecordBatch.from_arrays([block.column(0), subs], names=schema.fieldNames())
 
     return nearest_centroids(vecs, books, dsub, emit, schema)
 

@@ -860,59 +860,26 @@ def ngram_jaccard_pairs(
 # --------------------------------------------------------------------------
 
 
-# Embedding width of the engine's vector fixtures/corpora. dot_expr
-# unrolls its fast path to this width by default; inputs of any OTHER
-# width take the guarded fold branch — bit-identical either way, so
-# this is purely a codegen fast path, never a correctness assumption.
-EMB_UNROLL_DIM = 64
-
-
-def dot_expr(a_col: str, b_col: str, dim: int | None = EMB_UNROLL_DIM) -> str:
+def dot_expr(a_col: str, b_col: str) -> str:
     """Pinned-order dot product — bit-identical in DuckDB.
 
     The semantic definition is the sequential fold: zip_with multiplies
     pairwise (after exact float->double casts), then a left-to-right
-    aggregate sums, so IEEE-754 evaluation order is pinned and Spark
-    and the oracle produce the same double bits.
-
-    The fold is a higher-order function — Spark evaluates it
-    INTERPRETED (HigherOrderFunction is CodegenFallback), ~20 us per
-    64-dim evaluation, which dominates every O(pairs) similarity join
-    (guide §4.1: prefer codegen-able built-ins). When ``dim`` is given,
-    a statically UNROLLED sum — ``cast(0 as double) + a[1]*b[1] + ...``
-    — runs instead whenever both arrays are exactly ``dim`` wide.
-    Left-associative ``+`` is the identical evaluation order (including
-    the fold's 0.0 seed, so a -0.0 first product keeps the same signed
-    zero), each multiplication is the identical cast-then-multiply, and
-    IEEE ops are deterministic: the unrolled branch produces the same
-    bits as the fold by construction. Any other width (or NULL array)
-    falls back to the fold via the size guard, so behavior on
-    arbitrary inputs is unchanged — and the guard keeps ANSI-mode
-    element_at in-bounds.
+    aggregate sums from a 0.0 seed, so IEEE-754 evaluation order is
+    pinned and Spark and the oracle produce the same double bits. A
+    NULL array, a NULL element or a width mismatch makes it NULL. The
+    reference that ``functions/vectors.py``'s numpy loops match; no
+    operator evaluates it.
     """
-    fold = (
+    return (
         f"aggregate(zip_with({a_col}, {b_col}, (p, q) -> cast(p as double) * cast(q as double)), "
         "cast(0 as double), (acc, v) -> acc + v)"
     )
-    if dim is None:
-        return fold
-    terms = " + ".join(
-        f"cast(element_at({a_col}, {i}) as double) * "
-        f"cast(element_at({b_col}, {i}) as double)"
-        for i in range(1, int(dim) + 1)
-    )
-    return (
-        f"IF(size({a_col}) = {int(dim)} AND size({b_col}) = {int(dim)}, "
-        f"(cast(0 as double) + {terms}), {fold})"
-    )
 
 
-def cosine_expr(a_col: str, b_col: str, dim: int | None = EMB_UNROLL_DIM) -> str:
-    """Sequential-fold cosine similarity — bit-identical in DuckDB.
-
-    Built on :func:`dot_expr` (pinned-order dot with a codegen-unrolled
-    fast path when ``dim`` is given — see its docstring for the
-    bit-equality argument).
+def cosine_expr(a_col: str, b_col: str) -> str:
+    """Sequential-fold cosine similarity over :func:`dot_expr`, a
+    reference like it — bit-identical in DuckDB.
 
     try_divide, not ``/``: a zero vector has norm 0 and ANSI division
     THROWS mid-corpus; DuckDB returns NULL for x/0, so try_divide is
@@ -920,8 +887,8 @@ def cosine_expr(a_col: str, b_col: str, dim: int | None = EMB_UNROLL_DIM) -> str
     filter in both engines, dropping the pair).
     """
     return (
-        f"try_divide({dot_expr(a_col, b_col, dim)}, "
-        f"sqrt({dot_expr(a_col, a_col, dim)} * {dot_expr(b_col, b_col, dim)}))"
+        f"try_divide({dot_expr(a_col, b_col)}, "
+        f"sqrt({dot_expr(a_col, a_col)} * {dot_expr(b_col, b_col)}))"
     )
 
 

@@ -11,28 +11,21 @@ Approximate-nearest-neighbor over ``array<float>`` embeddings:
                                buckets (the scale path for
                                dedup.embedding_neardup_pairs)
 
-All cosine math is the sequential fold of ``operators.dedup.cosine_expr``
-so the DuckDB oracle reproduces the exact double bits (no float-ordering
-drift — see that docstring). Brute force runs it in the blocked Arrow
-kernel of ``functions.vectors`` (pinned-order numpy sums, same bits),
-as do IVF assignment, PQ encoding and k-means training;
-the candidate-pair paths (LSH, IVF, SemDeDup, PQ) use ``dot_expr``.
-Self-dot note: those paths compute each side's norm term once per row,
-not once per pair; the expression tree is identical, so the bits are
-too.
-Hyperplanes come from ``functions.hashing.hyperplanes`` — md5-derived
-±1 literals inlined into BOTH engines' plans, one source of truth.
+All cosine and squared-L2 math runs in the Arrow kernels of
+``functions.vectors``, whose pinned-order numpy sums give the bits of
+the ``operators.dedup.cosine_expr`` fold, so the DuckDB oracle
+reproduces the exact doubles. Hyperplanes come from
+``functions.hashing.hyperplanes``, one source for both engines.
 
 Scale notes (100 TB / 1000 executors):
 - Brute force is O(probes × corpus) — fine only when the probe side is
   small enough to broadcast (the driver collects it once and ships it
   in the kernel's closure). The corpus side streams: no shuffle of the
   big table at all.
-- The LSH path shuffles the corpus ONCE on bucket id (uniform by
-  construction — sign bits of random projections), then joins the
-  (tiny, broadcast) probe multiprobe set against it. Per-bucket
-  candidate lists are bounded; raise ``n_planes`` as the corpus grows
-  (buckets ~ corpus/2^planes).
+- LSH and IVF top-k stream the corpus with its bucket or cell against
+  the probes collected with their keys; LSH near-dup and SemDeDup
+  collect the keyed frame once and pair rows inside each key. Raise
+  ``n_planes`` as the corpus grows (buckets ~ corpus/2^planes).
 - Top-k per probe is a window over candidates only, never the corpus.
 - IVF/PQ quantizers are collected to the driver; assignment and
   encoding stream the corpus, and each k-means iteration is one pass.
@@ -40,52 +33,29 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from logzilla_spark.functions.caching import persist_tracked
+from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
+
 from logzilla_spark.functions.hashing import hyperplanes
-from logzilla_spark.functions.vectors import cosine_topk_partial, lloyd, nearest_cells, nearest_codes
-from logzilla_spark.operators.dedup import COSINE_THRESHOLD, cosine_expr, dot_expr
+from logzilla_spark.functions.vectors import (
+    code_distances,
+    cosine_topk_partial,
+    keyed_cosines,
+    keyed_pairs,
+    lloyd,
+    nearest_cells,
+    nearest_codes,
+    sign_buckets,
+)
+from logzilla_spark.operators.dedup import COSINE_THRESHOLD
 
 N_PLANES = 8
 EMB_DIM = 64
 DEFAULT_K = 5
-
-
-def bucket_expr(vec_col: str, n_planes: int = N_PLANES, dim: int = EMB_DIM) -> str:
-    """Sign-LSH bucket id: bit j set iff dot(vec, hyperplane_j) >= 0.
-
-    Semantic form: per plane, the pinned left-to-right fold
-    ``aggregate(zip_with(vec, plane, (p, q) -> cast(p as double) *
-    cast(q as double)), 0.0, (acc, v) -> acc + v)`` with the md5 ±1
-    plane literals — an interpreted higher-order expression costing
-    ~20us x n_planes per row. Emitted form, bit-identical and
-    whole-stage-codegen: the plane values are ±1, so each product is
-    an exact sign application (p * 1.0 = p, p * -1.0 = -p, and IEEE
-    defines a - b as a + (-b)), letting the dot unroll into a bare
-    add/subtract chain over the same left-associative order and 0.0
-    seed. The single width guard is exact too: for ANY vector not
-    exactly ``dim`` wide (or NULL), zip_with pads with NULLs, every
-    plane dot folds to NULL, every ``IF(dot >= 0, bit, 0)`` term
-    yields 0 — so the fold's value is the constant 0L the guard's
-    else-branch returns (a dim-wide vector containing a NULL element
-    takes the unrolled branch, where the NULL propagates to the same
-    per-plane 0). Keeping the else-branch a literal instead of the
-    fold also keeps the expression tree small enough that Catalyst
-    analysis + codegen compile stay off the per-query critical path
-    (measured: the guarded fold-fallback form cost ~1.3s of pure
-    plan/compile overhead per LSH query at CI scale)."""
-    hps = hyperplanes(n_planes, dim)
-    terms = []
-    for j, hp in enumerate(hps):
-        chain = "".join(
-            f" {'+' if hp[i - 1] > 0 else '-'} "
-            f"cast(element_at({vec_col}, {i}) as double)"
-            for i in range(1, int(dim) + 1)
-        )
-        terms.append(f"IF((cast(0 as double){chain}) >= 0, {1 << j}L, 0L)")
-    planes_sum = " + ".join(terms)
-    return f"IF(size({vec_col}) = {int(dim)}, {planes_sum}, 0L)"
 
 
 def signlsh_buckets(
@@ -95,12 +65,11 @@ def signlsh_buckets(
     n_planes: int = N_PLANES,
     dim: int = EMB_DIM,
 ) -> DataFrame:
-    """(id, embedding, bucket) — one narrow projection, no shuffle."""
-    return emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("embedding"),
-        F.expr(bucket_expr(vec_col, n_planes, dim)).alias("bucket"),
-    )
+    """(id, embedding, bucket): bit j set iff dot(vec, hyperplane_j) >=
+    0 as the pinned fold, 0 for a vector not exactly ``dim`` wide or
+    holding a NULL. One Arrow pass, no shuffle."""
+    vecs = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("embedding"))
+    return sign_buckets(vecs, hyperplanes(n_planes, dim))
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
@@ -148,41 +117,28 @@ def cosine_topk_lsh(
     """Approximate top-k: candidates = corpus rows whose sign-LSH bucket
     is within hamming distance 1 of the probe's bucket (multiprobe).
 
-    The corpus is bucketed once (no shuffle — projection only); the
-    probe×(1+n_planes) multiprobe key set is broadcast and hash-joined
-    against it. Exact cosine is computed for candidates only.
+    The bucketed corpus streams against the probe x (1+n_planes)
+    multiprobe keys collected to the driver; exact cosine is computed
+    for candidates only.
     """
-    # Self-dots hoisted out of the candidate loop (the self-dot note,
-    # module docstring): per-row norm terms, identical bits.
     cb = signlsh_buckets(emb, id_col, vec_col, n_planes, dim).select(
-        F.col("id").alias("neighbor_id"),
-        F.col("embedding").alias("_ce"),
-        "bucket",
-    ).withColumn("_cd2", F.expr(dot_expr("_ce", "_ce", dim)))
-    pb = signlsh_buckets(probes, id_col, vec_col, n_planes, dim).select(
-        F.col("id").alias("probe_id"),
-        F.col("embedding").alias("_pe"),
-        F.col("bucket").alias("_pbucket"),
-    ).withColumn("_pd2", F.expr(dot_expr("_pe", "_pe", dim)))
+        F.col("id").alias("neighbor_id"), F.col("embedding").alias("_ce"), "bucket"
+    )
     flips = "array(" + ", ".join(
-        ["_pbucket"] + [f"_pbucket ^ {1 << j}L" for j in range(n_planes)]
+        ["bucket"] + [f"bucket ^ {1 << j}L" for j in range(n_planes)]
     ) + ")"
-    probe_keys = pb.select(
-        "probe_id", "_pe", "_pd2", F.explode(F.expr(flips)).alias("bucket")
+    probe_keys = signlsh_buckets(probes, id_col, vec_col, n_planes, dim).select(
+        F.col("id").alias("probe_id"), F.col("embedding").alias("_pe"),
+        F.explode(F.expr(flips)).alias("bucket"),
     )
-    scored = (
-        cb.join(F.broadcast(probe_keys), "bucket")
-        .filter(F.col("probe_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.expr(
-                f"try_divide({dot_expr('_pe', '_ce', dim)}, sqrt(_pd2 * _cd2))"
-            ),
-        )
-        .select("probe_id", "neighbor_id", "cosine")
-        .distinct()
+    return _topk(keyed_cosines(cb, probe_keys).distinct(), k)
+
+
+def _pair_rows(cols, a, b, cos) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [cols[0].take(a), cols[0].take(b), pa.array(cos, pa.float64())],
+        names=["vec_a", "vec_b", "cosine"],
     )
-    return _topk(scored, k)
 
 
 def embedding_neardup_lsh(
@@ -195,34 +151,12 @@ def embedding_neardup_lsh(
 ) -> DataFrame:
     """Near-dup pairs restricted to same-bucket candidates — the scale
     path for ``dedup.embedding_neardup_pairs`` (which is its recall
-    oracle at CI scale). One shuffle on bucket id, exact cosine verify
-    inside buckets only."""
-    # Self-dots hoisted out of the per-bucket pair loop (the self-dot
-    # note): one norm term per row, identical bits.
-    b = signlsh_buckets(emb, id_col, vec_col, n_planes, dim).withColumn(
-        "_d2", F.expr(dot_expr("embedding", "embedding", dim))
-    )
-    a = b.select(
-        F.col("id").alias("vec_a"), F.col("embedding").alias("_ea"),
-        F.col("_d2").alias("_da"), "bucket",
-    )
-    c = b.select(
-        F.col("id").alias("vec_b"), F.col("embedding").alias("_eb"),
-        F.col("_d2").alias("_db"), "bucket",
-    )
-    return (
-        a.join(c, "bucket")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn(
-            "cosine",
-            F.expr(
-                f"try_divide({dot_expr('_ea', '_eb', dim)}, sqrt(_da * _db))"
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("vec_a", "vec_b", "cosine")
-        .distinct()
-    )
+    oracle at CI scale). The bucketed frame is collected once and exact
+    cosine verified inside buckets only."""
+    b = signlsh_buckets(emb, id_col, vec_col, n_planes, dim)
+    ab = [StructField(c, b.schema["id"].dataType) for c in ("vec_a", "vec_b")]
+    schema = StructType(ab + [StructField("cosine", DoubleType())])
+    return keyed_pairs(emb.sparkSession, b.toArrow(), threshold, None, _pair_rows, schema).distinct()
 
 
 # IVF coarse quantization: cells, and how many nearest cells a probe
@@ -305,32 +239,24 @@ def cosine_topk_ivf(
     vectors living in each probe's ``nprobe`` nearest cells.
 
     The corpus is assigned to cells once (one nearest-centroid pass,
-    no shuffle) and joined on cell id against the
-    broadcast probe->cells set. A corpus vector lives in exactly ONE
+    no shuffle) and streams against the probe->cells set collected to
+    the driver. A corpus vector lives in exactly ONE
     cell and a probe's nprobe cells are distinct, so candidate pairs
     are already unique — no distinct needed (unlike the LSH multiprobe
     path). Complements cosine_topk_lsh: IVF buckets adapt to the data
     (seeds come from the corpus), LSH buckets are data-independent.
     """
     seeds = ivf_seeds(emb, n_cells, id_col, vec_col)
+    return _ivf_topk(emb, probes, seeds, k, nprobe, id_col, vec_col)
+
+
+def _ivf_topk(emb, probes, seeds, k, nprobe, id_col, vec_col) -> DataFrame:
+    """The IVF serve body over any (cell, seed) quantizer."""
     corpus = ivf_assign(emb, seeds, id_col, vec_col).select(
-        F.col("id").alias("neighbor_id"),
-        F.col("embedding").alias("_ce"),
-        "cell",
-    ).withColumn("_cd2", F.expr(dot_expr("_ce", "_ce")))
-    probe_cells = probe_nearest_cells(
-        probes, seeds, nprobe, id_col, vec_col
-    ).withColumn("_pd2", F.expr(dot_expr("_pe", "_pe")))
-    scored = (
-        corpus.join(F.broadcast(probe_cells), "cell")
-        .filter(F.col("probe_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.expr(f"try_divide({dot_expr('_pe', '_ce')}, sqrt(_pd2 * _cd2))"),
-        )
-        .select("probe_id", "neighbor_id", "cosine")
+        F.col("id").alias("neighbor_id"), F.col("embedding").alias("_ce"), "cell"
     )
-    return _topk(scored, k)
+    cells = probe_nearest_cells(probes, seeds, nprobe, id_col, vec_col)
+    return _topk(keyed_cosines(corpus, cells), k)
 
 
 IVF_TRAIN_ITERS = 5
@@ -387,30 +313,13 @@ def cosine_topk_ivf_trained(
     baseline is quantified in BENCH/ANN_RECALL.md.
     """
     seeds = ivf_train_kmeans(emb, n_cells, n_iters, id_col, vec_col)
-    corpus = ivf_assign(emb, seeds, id_col, vec_col).select(
-        F.col("id").alias("neighbor_id"),
-        F.col("embedding").alias("_ce"),
-        "cell",
-    ).withColumn("_cd2", F.expr(dot_expr("_ce", "_ce")))
-    probe_cells = probe_nearest_cells(
-        probes, seeds, nprobe, id_col, vec_col
-    ).withColumn("_pd2", F.expr(dot_expr("_pe", "_pe")))
-    scored = (
-        corpus.join(F.broadcast(probe_cells), "cell")
-        .filter(F.col("probe_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.expr(f"try_divide({dot_expr('_pe', '_ce')}, sqrt(_pd2 * _cd2))"),
-        )
-        .select("probe_id", "neighbor_id", "cosine")
-    )
-    return _topk(scored, k)
+    return _ivf_topk(emb, probes, seeds, k, nprobe, id_col, vec_col)
 
 
 # SemDeDup cell-size guard: cells larger than this skip the pairwise
 # stage entirely (all members kept) — the MAX_LSH_BUCKET posture: a
 # degenerate quantizer (all embeddings identical) must not buy a
-# corpus-squared join. Raise n_cells, don't raise the guard.
+# corpus-squared pair stage. Raise n_cells, don't raise the guard.
 MAX_SEMDEDUP_CELL = 10_000
 
 
@@ -438,57 +347,36 @@ def semdedup(
     counterpart whose buckets don't adapt to the data).
 
     Scale shape: cells and each vector's centroid cosine come from
-    ``ivf_seeds``/``ivf_assign`` (one nearest-centroid pass, no
-    shuffle; the seed table is collected to the driver). The pairwise
-    stage shuffles on cell id and is quadratic per cell, so cell
-    occupancy is the lever: size ``n_cells ~ corpus / target_cell``
-    (SemDeDup itself runs k-means with k in the tens of thousands at
-    LAION scale). ``max_cell`` guards the degenerate case — oversized
-    cells keep all members rather than detonating the join, mirrored
-    bit-for-bit in the DuckDB twin.
+    ``ivf_seeds``/``ivf_assign`` (one nearest-centroid pass). The
+    assignment is collected once and each cell's pairs are verified in
+    ``functions.vectors.keyed_pairs``; the result is built on the
+    driver. It is quadratic per cell, so cell occupancy is the lever: size
+    ``n_cells ~ corpus / target_cell`` (SemDeDup itself runs k-means
+    with k in the tens of thousands at LAION scale). ``max_cell`` guards
+    the degenerate case — oversized cells keep all members rather than
+    detonating the pair stage, mirrored bit-for-bit in the DuckDB twin.
     """
-    # Self-dot (_d2) carried for the pair stage (self-dot note). Four
-    # consumers (cell sizes, both pair sides, the final flag join)
-    # would each re-run the assignment — the lazy-plan persist policy
-    # of functions/caching.py; MEMORY_AND_DISK spills instead of OOMing.
     seeds = ivf_seeds(emb, n_cells, id_col, vec_col)
-    assigned = persist_tracked(
-        ivf_assign(emb, seeds, id_col, vec_col)
-        .withColumn("_d2", F.expr(dot_expr("embedding", "embedding")))
-    )
-    sizes = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("_csz"))
-    small = assigned.join(F.broadcast(sizes), "cell").filter(
-        F.col("_csz") <= int(max_cell)
-    )
-    x = small.select(
-        F.col("id").alias("_xid"), F.col("embedding").alias("_xe"),
-        F.col("centroid_cos").alias("_xc"), F.col("_d2").alias("_xd2"), "cell",
-    )
-    y = small.select(
-        F.col("id").alias("_yid"), F.col("embedding").alias("_ye"),
-        F.col("centroid_cos").alias("_yc"), F.col("_d2").alias("_yd2"), "cell",
-    )
-    dropped = (
-        x.join(y, "cell")
-        .filter(F.col("_xid") != F.col("_yid"))
-        .filter(
-            F.expr(
-                f"try_divide({dot_expr('_xe', '_ye')}, sqrt(_xd2 * _yd2))"
-            )
-            >= threshold
-        )
-        .filter(
-            (F.col("_yc") < F.col("_xc"))
-            | ((F.col("_yc") == F.col("_xc")) & (F.col("_yid") < F.col("_xid")))
-        )
-        .select(F.col("_xid").alias("id"))
-        .distinct()
-        .withColumn("_dropped", F.lit(True))
-    )
-    return assigned.join(dropped, "id", "left").select(
-        "id", "cell", "centroid_cos",
-        F.col("_dropped").isNull().alias("is_kept"),
-    )
+    assigned = ivf_assign(emb, seeds, id_col, vec_col)
+    t, spark, fields = assigned.toArrow(), emb.sparkSession, assigned.schema.fields
+    dropped = keyed_pairs(spark, t, threshold, int(max_cell), _dropped, StructType(fields[:1]))
+    drop_ids = dropped.toArrow().column(0).combine_chunks()
+    kept = pc.invert(pc.is_in(t.column(0), value_set=drop_ids))
+    schema = StructType([fields[0], *fields[2:], StructField("is_kept", BooleanType(), False)])
+    out = pa.table([t.column(0), *t.columns[2:], kept], names=schema.fieldNames())
+    return spark.createDataFrame(out, schema)
+
+
+def _dropped(cols, a, b, cos) -> pa.RecordBatch:
+    """The id each near-dup pair drops: the member whose (centroid_cos,
+    id) is higher, in Spark's order (NaN above every number, NaN equal
+    to NaN); none when either centroid cosine is NULL. ``a`` has the
+    lower id, so it drops only on a strictly higher centroid cosine."""
+    valid = cols[2].is_valid().to_numpy(zero_copy_only=False)
+    c = cols[2].fill_null(0.0).to_numpy()
+    a, b = a[valid[a] & valid[b]], b[valid[a] & valid[b]]
+    a_drops = (c[b] < c[a]) | (np.isnan(c[a]) & ~np.isnan(c[b]))
+    return pa.RecordBatch.from_arrays([cols[0].take(np.where(a_drops, a, b))], names=["id"])
 
 
 # --------------------------------------------------------------------------
@@ -514,32 +402,16 @@ PQ_M = 8       # subspaces (dim 64 -> 8-dim subvectors)
 PQ_KSUB = 16   # codewords per subspace (codes fit 4 bits; stored int)
 
 
-def l2sq_expr(a_col: str, b_col: str, dim: int | None = None) -> str:
+def l2sq_expr(a_col: str, b_col: str) -> str:
     """Pinned-order squared-L2 fold — bit-identical in DuckDB (the
     same discipline as ``dedup.cosine_expr``: zip_with then a
-    left-to-right aggregate, all doubles).
-
-    ``dim`` enables the dot_expr-style codegen-unrolled fast path
-    (guarded on exact array width; identical bits — see
-    dedup.dot_expr). PQ callers pass the subvector width dim // m."""
-    fold = (
+    left-to-right aggregate, all doubles): the reference
+    ``functions.vectors._l2sq`` matches; no operator calls it."""
+    return (
         f"aggregate(zip_with({a_col}, {b_col}, (p, q) -> "
         "(cast(p as double) - cast(q as double)) * "
         "(cast(p as double) - cast(q as double))), "
         "cast(0 as double), (acc, v) -> acc + v)"
-    )
-    if dim is None:
-        return fold
-    terms = " + ".join(
-        f"(cast(element_at({a_col}, {i}) as double) - "
-        f"cast(element_at({b_col}, {i}) as double)) * "
-        f"(cast(element_at({a_col}, {i}) as double) - "
-        f"cast(element_at({b_col}, {i}) as double))"
-        for i in range(1, int(dim) + 1)
-    )
-    return (
-        f"IF(size({a_col}) = {int(dim)} AND size({b_col}) = {int(dim)}, "
-        f"(cast(0 as double) + {terms}), {fold})"
     )
 
 
@@ -606,7 +478,7 @@ ADC_EXPR = (
 
 
 def adc_expr(m: int | None = PQ_M) -> str:
-    """ADC score with the dot_expr-style codegen fast path: when both
+    """ADC score with a codegen fast path: when both
     arrays are exactly ``m`` wide the m lookups are unrolled into a
     left-associative sum (identical bits — same order, same 0.0 seed);
     any other width takes the interpreted fold (ADC_EXPR)."""
@@ -635,26 +507,11 @@ def pq_probe_luts(
     codeword, ordered by code (luts[sub][code]). m x ksub doubles per
     probe: tiny by the probes-are-small contract, always broadcast by
     callers. Shared by pq_topk / pq_topk_ivf / pq_topk_trained and the
-    persisted-index server (operators.ann_index)."""
-    psv = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.explode(F.expr(_subvectors(vec_col, m, dim))).alias("_s"),
-    ).select("probe_id", F.col("_s.sub").alias("sub"), F.col("_s.sv").alias("sv"))
-    lut_sub = (
-        psv.join(F.broadcast(codebooks), "sub")
-        .withColumn("_pd", F.expr(l2sq_expr("sv", "codeword", dim // m)))
-        .groupBy("probe_id", "sub")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(code, _pd))), s -> s._pd)"
-            ).alias("lut")
-        )
-    )
-    return lut_sub.groupBy("probe_id").agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(sub, lut))), s -> s.lut)"
-        ).alias("luts")
-    )
+    persisted-index server (operators.ann_index). One nearest-centroid
+    pass over the probes against the collected codebook; a probe id
+    held by several rows gets one row each."""
+    p = probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("_pe"))
+    return code_distances(p, codebooks.select("sub", "code", "codeword"), dim // m)
 
 
 def adc_topk(pairs: DataFrame, k: int = DEFAULT_K, m: int = PQ_M) -> DataFrame:
@@ -694,6 +551,11 @@ def pq_topk(
     DuckDB twin reproduces the exact double bits.
     """
     codebooks = pq_codebooks_seeded(emb, m, ksub, dim, id_col, vec_col)
+    return _pq_topk(emb, probes, codebooks, k, m, dim, id_col, vec_col)
+
+
+def _pq_topk(emb, probes, codebooks, k, m, dim, id_col, vec_col) -> DataFrame:
+    """The PQ serve body over any (sub, code, codeword) codebook."""
     codes = pq_encode(emb, codebooks, m, dim, id_col, vec_col).select(
         F.col("vec_id").alias("neighbor_id"), "codes"
     )
@@ -792,11 +654,4 @@ def pq_topk_trained(
     oracle_dataops.pq_topk_trained_sql (fixed-point training, see
     pq_train_kmeans) and recall-graded in BENCH/ANN_RECALL.md."""
     codebooks = pq_train_kmeans(emb, m, ksub, dim, n_iters, id_col, vec_col)
-    codes = pq_encode(emb, codebooks, m, dim, id_col, vec_col).select(
-        F.col("vec_id").alias("neighbor_id"), "codes"
-    )
-    luts = pq_probe_luts(probes, codebooks, m, dim, id_col, vec_col)
-    pairs = codes.join(
-        F.broadcast(luts), F.col("probe_id") != F.col("neighbor_id")
-    )
-    return adc_topk(pairs, k)
+    return _pq_topk(emb, probes, codebooks, k, m, dim, id_col, vec_col)

@@ -1399,7 +1399,7 @@ def test_url_curate_pre1970_order(spark, tmp_path):
 
 def test_release_operator_caches_frees_tracked_persists(spark):
     """Operators that return lazy plans over persisted internals
-    (semdedup assignment, bpe/dsir occurrence streams) register them;
+    (bpe/dsir occurrence streams) register them;
     ``release_operator_caches`` frees them (ADVICE r3 leak-by-default
     finding)."""
     import time
@@ -1416,18 +1416,19 @@ def test_release_operator_caches_frees_tracked_persists(spark):
     # sizes, so concurrent drains cannot mask this test's additions)
     caching.release_operator_caches()
     base = rdd_ids()
-    emb = _emb(spark)
-    n = similarity.semdedup(emb, n_cells=2).count()
+    docs = _docs(spark)
+    target = docs.filter(F.col("doc_id") == 1)
+    n = textstats.dsir_scores(docs, target).count()
     added = rdd_ids() - base
-    assert added  # the assignment persist registered and materialized
+    assert added  # the occurrence-stream persist registered and materialized
     assert n >= 1
     # a repeated call on the same input finds its plans cached:
     # no second registration, no second cache entry
     tracked = len(caching._TRACKED)
-    assert similarity.semdedup(emb, n_cells=2).count() == n
+    assert textstats.dsir_scores(docs, target).count() == n
     assert len(caching._TRACKED) == tracked
     assert rdd_ids() - base == added
-    # one release unpersists the assignment (async — poll briefly)
+    # one release unpersists the occurrence stream (async — poll briefly)
     assert caching.release_operator_caches() == tracked
     for _ in range(50):
         if not (rdd_ids() & added):

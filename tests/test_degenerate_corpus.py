@@ -430,6 +430,104 @@ def test_semdedup_twin(spark, tmp_path_factory):
     _assert_twin(similarity.semdedup(spark.read.parquet(path)), od.semdedup_sql(path))
 
 
+@pytest.fixture(scope="module")
+def dup_emb_path(tmp_path_factory):
+    """Full-width vectors where vec_id 3 holds two rows with different
+    vectors, both near id 1 and the probe 10 (ids 4 and 5 are near each
+    other), so the duplicate pairs through each of its rows."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.RandomState(17)
+    base = {i: rng.randn(64) for i in range(1, 11)}
+    near = {3: 1, 4: 3, 5: 3, 10: 1}
+    rows = [(i, base[near.get(i, i)] + 0.01 * rng.randn(64) * (i in near)) for i in range(1, 11)]
+    rows.append((3, base[1] + 0.01 * rng.randn(64)))
+    p = os.path.join(str(tmp_path_factory.mktemp("dup_emb")), "emb.parquet")
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array([i for i, _ in rows], pa.int64()),
+            "embedding": pa.array(
+                [list(map(float, v.astype(np.float32))) for _, v in rows],
+                pa.list_(pa.float32()),
+            ),
+        }),
+        p,
+    )
+    return p
+
+
+@pytest.mark.parametrize("name", ["embedding_neardup_lsh", "cosine_topk_lsh"])
+def test_duplicate_id_lsh_twins(spark, dup_emb_path, name):
+    """A vec_id held by two rows pairs through each of its rows, in
+    Spark and in the DuckDB twin. Probes are ids 5 and 10."""
+    from pyspark.sql import functions as F
+
+    from logzilla_spark.operators import similarity
+
+    emb = spark.read.parquet(dup_emb_path)
+    if name == "embedding_neardup_lsh":
+        sdf, sql = similarity.embedding_neardup_lsh(emb), od.embedding_neardup_lsh_sql(dup_emb_path)
+    else:
+        probes = emb.filter(F.col("vec_id") % 5 == 0)
+        sdf = similarity.cosine_topk_lsh(emb, probes, k=5)
+        sql = od.cosine_topk_lsh_sql(dup_emb_path, k=5, probe_mod=5)
+    assert sdf.count() > 0
+    _assert_twin(sdf, sql)
+
+
+# Per-row results on the duplicate-id corpus, columns in name order.
+# The IVF and SemDeDup twins pick cells per id (``PARTITION BY e.id``)
+# and so keep one of id 3's two rows; Spark assigns and pairs each row,
+# which these rows pin (id 3 is probe 10's neighbour twice, and both
+# of its rows appear in the SemDeDup output).
+DUP_ID_ROWS = {
+    "cosine_topk_ivf": [  # cosine, neighbor_id, probe_id, rank
+        ("-0.06047937553290157", "2", "5", "4"),
+        ("-0.332414918046345", "8", "5", "5"),
+        ("0.023695296467646766", "6", "5", "3"),
+        ("0.034549973731717046", "9", "5", "2"),
+        ("0.1510454485731014", "7", "10", "4"),
+        ("0.9998752203613874", "4", "5", "1"),
+        ("0.9999209428344239", "3", "10", "3"),
+        ("0.9999220088198694", "3", "10", "2"),
+        ("0.9999482697673103", "1", "10", "1"),
+    ],
+    "semdedup": [  # cell, centroid_cos, id, is_kept
+        ("0", "0.15278223114517525", "7", "True"),
+        ("0", "0.9999470379905357", "3", "False"),
+        ("0", "0.9999482697673103", "10", "False"),
+        ("0", "0.9999589647565875", "3", "False"),
+        ("0", "1.0", "1", "False"),
+        ("1", "-0.00835705419091744", "9", "True"),
+        ("1", "-0.06047937553290157", "5", "False"),
+        ("1", "-0.0638034155170745", "4", "True"),
+        ("1", "0.14354122971634262", "8", "True"),
+        ("1", "0.2803045979194895", "6", "True"),
+        ("1", "1.0", "2", "True"),
+    ],
+}
+
+
+@pytest.mark.parametrize("name", sorted(DUP_ID_ROWS))
+def test_duplicate_id_cell_rows(spark, dup_emb_path, name):
+    """Two cells keep the seeds (ids 1 and 2) free of the duplicate."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from logzilla_spark.operators import similarity
+
+    emb = spark.read.parquet(dup_emb_path)
+    if name == "semdedup":
+        sdf = similarity.semdedup(emb, n_cells=2)
+    else:
+        probes = emb.filter(F.col("vec_id") % 5 == 0)
+        sdf = similarity.cosine_topk_ivf(emb, probes, k=5, n_cells=2, nprobe=1)
+    assert canon_rows(sdf.toPandas()) == Counter(DUP_ID_ROWS[name])
+
+
 @pytest.mark.parametrize(
     "name",
     ["pq_topk", "pq_topk_ivf", "cosine_topk_ivf", "cosine_topk_ivf_trained"],

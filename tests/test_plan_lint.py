@@ -91,6 +91,39 @@ def test_lineage_truncation_only_in_caching_module():
     assert hits == {"functions/caching.py"}, hits
 
 
+def test_vector_folds_only_in_vector_kernel():
+    """Pinned vector arithmetic lives in ``functions/vectors.py`` alone:
+    no operator or plan builds a Catalyst cosine, dot or squared-L2
+    fold. The fold helpers stay as the reference that tests, scripts
+    and the DuckDB twins compare against."""
+    import ast
+    import pathlib
+
+    import logzilla_spark
+
+    folds = {"dot_expr", "cosine_expr", "l2sq_expr"}
+    root = pathlib.Path(logzilla_spark.__file__).parent
+    hits = []
+    for sub in ("operators", "plans"):
+        for p in sorted((root / sub).rglob("*.py")):
+            tree = ast.parse(p.read_text())
+            # cosine_expr composes dot_expr: calls inside a fold's own
+            # definition are the definition, not a use
+            inside = {
+                id(n)
+                for f in ast.walk(tree)
+                if isinstance(f, ast.FunctionDef) and f.name in folds
+                for n in ast.walk(f)
+            }
+            hits += [
+                f"{p.relative_to(root)}:{n.lineno}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Call) and id(n) not in inside
+                and getattr(n.func, "id", getattr(n.func, "attr", None)) in folds
+            ]
+    assert not hits, hits
+
+
 def test_scripts_take_core_count_from_session():
     """Scripts size their session through ``get_spark()``, whose
     ``session.DEFAULT_CPUS`` reads ``SPARK_GRAFT_CPUS``: a literal

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 
 from logzilla_spark.operators import similarity as S
+from logzilla_spark.operators.dedup import cosine_expr
 
 DIM = 16
 M = 4
@@ -166,7 +167,7 @@ def test_pq_topk_ivf_consistent_with_components(spark, emb_df):
     pc = (
         probes_df.select(F.col("vec_id").alias("probe_id"), "embedding")
         .crossJoin(F.broadcast(seeds))
-        .withColumn("_cos", F.expr(S.cosine_expr("embedding", "seed")))
+        .withColumn("_cos", F.expr(cosine_expr("embedding", "seed")))
         .collect()
     )
     by_probe = {}
